@@ -2,14 +2,24 @@
 point (the joern-parse lifecycle, JoernParse.scala:81-92, as a
 distributed, checkpointed DAG).
 
-Stage DAG (each gated by the per-bucket manifest, plans/manifest.py):
+Stage DAG of `run_job` (each stage gated by the per-bucket manifest,
+plans/manifest.py). `manifest.run_dag` starts a stage as soon as every
+stage it reads is committed, so stages run concurrently on threads.
 
-  ingest (bucketed transcripts)
-    ├─ s1_turns / s1_next_turn      conv-local, per-bucket
-    ├─ s2_mentions / s2_triples_raw conv-local, per-bucket
-    ├─ s3_linked                    conv-local (broadcast entities), per-bucket
-    ├─ s4_canonical_map             global (connected components)
-    └─ s5_triples_final             global (canonical rewrite + dedup)
+  ingest (bucketed transcripts, cached)
+    │   these five read only the transcripts and start at once:
+    ├─ s1_turns          conv-local, per-bucket
+    ├─ s1_next_turn      conv-local, per-bucket
+    ├─ s2_mentions       conv-local, per-bucket
+    ├─ s2_triples_raw    conv-local, per-bucket
+    └─ s4_canonical_map  global (connected components)
+
+  then, each while the other first-wave stages may still run:
+    s3_linked         ← s2_mentions
+                        conv-local (committed mentions ⋈ broadcast
+                        entities), per-bucket
+    s5_triples_final  ← s2_triples_raw + s4_canonical_map
+                        global (canonical rewrite + dedup)
 
 Usage:
   spark-submit --py-files joern_spark.zip -m joern_spark.job \
@@ -29,7 +39,13 @@ from pyspark.sql import functions as F
 from joern_spark import generator as G
 from joern_spark.operators import assemble, canonicalize, link, materialize, rebind
 from joern_spark.operators.extract import extract_mentions, extract_triples_raw
-from joern_spark.plans.manifest import BUCKET_COL, StageRunner, input_fingerprint, with_bucket
+from joern_spark.plans.manifest import (
+    BUCKET_COL,
+    StageRunner,
+    input_fingerprint,
+    run_dag,
+    with_bucket,
+)
 from joern_spark.sources.transcripts import read_entities, read_transcripts
 
 
@@ -68,21 +84,15 @@ def run_job(
 
         return compute
 
-    turns = runner.run_stage("s1_turns", bucketed(assemble.turn_nodes), fps)
-    next_turn = runner.run_stage(
-        "s1_next_turn",
-        bucketed(assemble.next_turn_edges, conv_id_from="src"),
-        fps,
-    )
-    mentions = runner.run_stage("s2_mentions", bucketed(extract_mentions), fps)
-    triples_raw = runner.run_stage(
-        "s2_triples_raw", bucketed(extract_triples_raw), fps
-    )
-    linked = runner.run_stage(
-        "s3_linked",
-        bucketed(lambda df: link.link_mentions(extract_mentions(df), entities)),
-        fps,
-    )
+    def link_committed(mentions):
+        """s3 links the committed s2 rows of its pending buckets — the
+        mentions are extracted once, by s2."""
+
+        def compute(pending):
+            sub = mentions.where(F.col(BUCKET_COL).isin(pending)).drop(BUCKET_COL)
+            return with_bucket(link.link_mentions(sub, entities), n_buckets)
+
+        return compute
 
     # global stages: fingerprint = combined fingerprint of every input bucket
     global_fp = "|".join(f"{b}:{fps[b]}" for b in sorted(fps))
@@ -92,25 +102,56 @@ def run_job(
             canonicalize.same_as_pairs(t.drop(BUCKET_COL))
         )
 
-    cmap = runner.run_global_stage("s4_canonical_map", compute_cmap, global_fp)
-
-    def compute_final():
+    def compute_final(triples_raw, cmap):
         raw = triples_raw.drop(BUCKET_COL)
         dyn = rebind.dbcur_triples(t.drop(BUCKET_COL))
         static = canonicalize.canonicalize_triples(raw, cmap)
         dyn_c = canonicalize.canonicalize_triples(dyn, cmap)
         return materialize.dedup_triples(static.unionByName(dyn_c))
 
-    final = runner.run_global_stage("s5_triples_final", compute_final, global_fp)
-    t.unpersist()
+    run, run_global = runner.run_stage, runner.run_global_stage
+    stages = {  # name: (stages it reads, what runs once they are committed)
+        "s1_turns": ((), lambda: run("s1_turns", bucketed(assemble.turn_nodes), fps)),
+        "s1_next_turn": (
+            (),
+            lambda: run(
+                "s1_next_turn",
+                bucketed(assemble.next_turn_edges, conv_id_from="src"),
+                fps,
+            ),
+        ),
+        "s2_mentions": ((), lambda: run("s2_mentions", bucketed(extract_mentions), fps)),
+        "s2_triples_raw": (
+            (),
+            lambda: run("s2_triples_raw", bucketed(extract_triples_raw), fps),
+        ),
+        "s3_linked": (
+            ("s2_mentions",),
+            lambda mentions: run("s3_linked", link_committed(mentions), fps),
+        ),
+        "s4_canonical_map": (
+            (),
+            lambda: run_global("s4_canonical_map", compute_cmap, global_fp),
+        ),
+        "s5_triples_final": (
+            ("s2_triples_raw", "s4_canonical_map"),
+            lambda raw, cmap: run_global(
+                "s5_triples_final", lambda: compute_final(raw, cmap), global_fp
+            ),
+        ),
+    }
+    try:
+        out = run_dag(spark, stages)
+    finally:
+        t.unpersist()
     return {
-        "turns": turns,
-        "next_turn": next_turn,
-        "mentions": mentions,
-        "triples_raw": triples_raw,
-        "linked": linked,
-        "canonical_map": cmap,
-        "triples_final": final,
+        "turns": out["s1_turns"],
+        "next_turn": out["s1_next_turn"],
+        "mentions": out["s2_mentions"],
+        "triples_raw": out["s2_triples_raw"],
+        "linked": out["s3_linked"],
+        "canonical_map": out["s4_canonical_map"],
+        "triples_final": out["s5_triples_final"],
     }
 
 

@@ -204,20 +204,18 @@ def _match_cond(rule: Rule) -> Column:
     return cond
 
 
-def _piece_col(pieces: list[Piece]) -> Column:
+def _piece_col(pieces: list[Piece], pattern: str) -> Column:
+    """One produced value: capture groups of `pattern`, literals and the
+    conversation-node id, concatenated."""
     cols = []
     for p in pieces:
         if p[0] == "g":
-            cols.append(F.regexp_extract(F.col("text"), _CURRENT_PATTERN[0], p[1]))
+            cols.append(F.regexp_extract(F.col("text"), pattern, p[1]))
         elif p[0] == "lit":
             cols.append(F.lit(p[1]))
         elif p[0] == "conv":
             cols.append(F.concat(F.lit("conv:"), F.col("conv_id")))
     return cols[0] if len(cols) == 1 else F.concat(*cols)
-
-
-# regex pattern threaded to _piece_col without widening every signature
-_CURRENT_PATTERN: list[str] = [""]
 
 
 def extract_mentions(
@@ -232,12 +230,11 @@ def extract_mentions(
     for rule in RULES if rules is None else rules:
         if not rule.mentions:
             continue
-        _CURRENT_PATTERN[0] = rule.pattern
         items = [
             F.struct(
                 F.lit(rule.name).alias("rule"),
                 F.lit(kind).alias("kind"),
-                _piece_col(pieces).alias("surface"),
+                _piece_col(pieces, rule.pattern).alias("surface"),
             )
             for kind, pieces in rule.mentions
         ]
@@ -264,12 +261,11 @@ def extract_triples_raw(
     for rule in RULES if rules is None else rules:
         if not rule.triples:
             continue
-        _CURRENT_PATTERN[0] = rule.pattern
         items = [
             F.struct(
-                _piece_col(s).alias("subj"),
+                _piece_col(s, rule.pattern).alias("subj"),
                 F.lit(pred).alias("pred"),
-                _piece_col(o).alias("obj"),
+                _piece_col(o, rule.pattern).alias("obj"),
             )
             for s, pred, o in rule.triples
         ]

@@ -17,7 +17,13 @@ conv-local stage (assemble/extract/link read the same partitioning —
 no further shuffle); the manifest itself is tiny (B rows per stage) and
 lives as atomic-renamed JSON files, the same role Iceberg's snapshot
 manifest plays on a real cluster. Counters ride in the manifest rows
-(the accumulator→metrics requirement).
+(the accumulator→metrics requirement): a bucket's `n_rows` is summed
+from the parquet footers of the data files just written, so it is
+exact, describes the committed files, and costs no Spark job.
+
+`run_dag` is the scheduler over StageRunner stages: each stage runs on
+its own thread as soon as the stages it reads are committed (Joern's
+LayerCreator runs a layer once its `dependsOn` layers are applied).
 """
 
 from __future__ import annotations
@@ -26,9 +32,12 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 BUCKET_COL = "_bucket"
 
@@ -59,6 +68,60 @@ def input_fingerprint(df: DataFrame, cols: list[str]) -> dict[int, str]:
         .collect()
     )
     return {r[BUCKET_COL]: f"{r['n']}:{r['s']}" for r in rows}
+
+
+def footer_rows(directory: str) -> int:
+    """Rows in the parquet data files directly under `directory`, read
+    from their footers. Only `*.parquet` files count: names starting with
+    '_' or '.' (`_SUCCESS`, `.crc` checksums, staging dirs) and other
+    extensions are skipped. A missing directory (a bucket that wrote no
+    rows) counts 0."""
+    if not os.path.isdir(directory):
+        return 0
+    return sum(
+        pq.read_metadata(e.path).num_rows
+        for e in os.scandir(directory)
+        if e.is_file()
+        and e.name.endswith(".parquet")
+        and not e.name.startswith(("_", "."))
+    )
+
+
+def run_dag(
+    spark: SparkSession, stages: dict[str, tuple[tuple[str, ...], "callable"]]
+) -> dict:
+    """Run `stages` = {name: (inputs, fn)} concurrently in dependency
+    order: `fn(*outputs of inputs)` is submitted as soon as every input
+    has returned, so the DAG alone sets how many run at once. Each thread
+    inherits the caller's Spark local properties (job group, description,
+    scheduler pool).
+
+    On the first failure nothing new is submitted; the call waits for
+    every in-flight stage to stop, then re-raises that first error — no
+    stage thread outlives the call. Returns {name: fn's result}."""
+    done: dict = {}
+    pending = dict(stages)
+    running: dict = {}
+    error: BaseException | None = None
+    with ThreadPoolExecutor(len(stages), thread_name_prefix="stage") as pool:
+        while True:
+            for name, (inputs, fn) in list(pending.items()):
+                if error is None and all(i in done for i in inputs):
+                    del pending[name]
+                    task = inheritable_thread_target(spark)(fn)
+                    running[pool.submit(task, *(done[i] for i in inputs))] = name
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                try:
+                    done[name] = fut.result()
+                except BaseException as e:  # noqa: BLE001 — re-raised below
+                    error = error or e
+    if error is not None:
+        raise error
+    return done
 
 
 class Manifest:
@@ -192,14 +255,6 @@ class StageRunner:
                 .parquet(path)
             )
             wall = time.time() - t0
-            written = self.read_stage(stage)
-            counts = {
-                r[BUCKET_COL]: r["n"]
-                for r in written.where(F.col(BUCKET_COL).isin(pending))
-                .groupBy(BUCKET_COL)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
             for i, b in enumerate(pending):
                 if (
                     self.fail_after_buckets is not None
@@ -215,7 +270,9 @@ class StageRunner:
                         "stage": stage,
                         "bucket": b,
                         "fingerprint": fingerprints[b],
-                        "n_rows": counts.get(b, 0),
+                        "n_rows": footer_rows(
+                            os.path.join(path, f"{BUCKET_COL}={b}")
+                        ),
                         "wall_s": round(wall, 3),
                         "run_id": self.run_id,
                         "ts": time.time(),
@@ -236,7 +293,6 @@ class StageRunner:
             df = compute()
             self._write_schema(stage, df.schema)
             df.write.mode("overwrite").parquet(path)
-            n = self.read_stage(stage).count()
             self.manifest.commit(
                 stage,
                 0,
@@ -244,7 +300,7 @@ class StageRunner:
                     "stage": stage,
                     "bucket": 0,
                     "fingerprint": fingerprint,
-                    "n_rows": n,
+                    "n_rows": footer_rows(path),
                     "wall_s": round(time.time() - t0, 3),
                     "run_id": self.run_id,
                     "ts": time.time(),

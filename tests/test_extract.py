@@ -2,12 +2,17 @@
 positive/negative examples (the querydb codeExamples analog,
 macros/.../Query.scala:20-21; DangerousFunctions.scala:28-51)."""
 
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
 from joern_spark.operators.extract import (
     RULES,
     extract_mentions,
     extract_mentions_pandas,
+    extract_triples_raw,
 )
 from joern_spark.sources.transcripts import read_transcripts
 
@@ -22,6 +27,38 @@ def test_pandas_udf_extractor_matches_jvm(spark):
     pd_ = rows_set(extract_mentions_pandas(t))
     assert jvm == pd_
     assert len(jvm) > 1000
+
+
+def test_concurrent_plan_construction_matches_serial(spark):
+    """Extractor plans built from 8 threads at once equal the serial
+    result row for row: each rule's regex reaches its capture-group
+    columns as an argument, not through shared module state another
+    thread could overwrite mid-build (concurrent job stages and server
+    requests both build these plans)."""
+    t = read_transcripts(spark, 0.001)
+    extractors = (extract_mentions, extract_triples_raw)
+    serial = {f: sorted(f(t).collect()) for f in extractors}
+    n = 8
+    start = threading.Barrier(n)
+
+    def build(i):
+        start.wait(timeout=60)
+        # half the threads build in the other order, so both extractors
+        # are under construction at the same moment
+        order = extractors if i % 2 else extractors[::-1]
+        return [(f, f(t)) for f in order]
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the builders as finely as possible
+    try:
+        with ThreadPoolExecutor(n) as pool:
+            built = list(pool.map(build, range(n), timeout=300))
+    finally:
+        sys.setswitchinterval(switch)
+    for plans in built:
+        for f, df in plans:
+            assert sorted(df.collect()) == serial[f], f.__name__
+    assert all(serial.values())
 
 
 # F4 query pack: per-rule positive / negative examples

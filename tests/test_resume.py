@@ -4,19 +4,43 @@ partitions — the distributed LayerCreator skip-if-applied semantics)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from joern_spark.job import run_job
 from joern_spark.pipeline import run_pipeline
-from joern_spark.plans.manifest import Manifest, SimulatedKill, StageRunner
+from joern_spark.plans.manifest import (
+    BUCKET_COL,
+    Manifest,
+    SimulatedKill,
+    StageRunner,
+    footer_rows,
+)
 
 SF = 0.001
 BUCKETS = 8
+BUCKETED_STAGES = (
+    "s1_turns", "s1_next_turn", "s2_mentions", "s2_triples_raw", "s3_linked"
+)
 
 
 def _assert_df_equal(a, b):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def _tree(root: str) -> dict[str, tuple[int, int]]:
+    """(size, mtime) of every file under `root`."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for name in files:
+            st = os.stat(os.path.join(d, name))
+            out[os.path.join(d, name)] = (st.st_size, st.st_mtime_ns)
+    return out
 
 
 def test_kill_and_resume(spark, tmp_path_factory):
@@ -26,10 +50,18 @@ def test_kill_and_resume(spark, tmp_path_factory):
     killed = StageRunner(spark, out, BUCKETS, fail_after_buckets=2)
     with pytest.raises(SimulatedKill):
         run_job(spark, SF, out, BUCKETS, runner=killed)
+    # the independent stages ran concurrently; the raise comes only after
+    # every one of them stopped, so no stage thread writes after the call
+    assert not [t for t in threading.enumerate() if t.name.startswith("stage")]
+    before = _tree(out)
+    time.sleep(1.0)
+    assert _tree(out) == before
     m = Manifest(f"{out}/_manifest")
     done1 = m.completed("s1_turns")
     assert len(done1) == 2
     assert all(r["run_id"] == killed.run_id for r in done1.values())
+    for stage in BUCKETED_STAGES:
+        assert len(m.completed(stage)) <= 2, stage
 
     # run 2: resumes, completes every stage
     resumed = StageRunner(spark, out, BUCKETS)
@@ -58,6 +90,97 @@ def test_kill_and_resume(spark, tmp_path_factory):
         assert all(
             r["run_id"] != third.run_id for r in m.completed(stage).values()
         ), stage
+
+
+def test_linked_from_committed_mentions_matches_fresh_link(
+    spark, tmp_path_factory, entities
+):
+    """s3_linked links the committed s2_mentions rows; the result equals
+    linking a fresh extraction of the transcripts, row for row."""
+    from joern_spark.operators import link
+    from joern_spark.operators.extract import extract_mentions
+    from joern_spark.sources.transcripts import read_transcripts
+
+    out = str(tmp_path_factory.mktemp("linked_out"))
+    linked = run_job(spark, SF, out, BUCKETS)["linked"].drop(BUCKET_COL)
+    expected = link.link_mentions(
+        extract_mentions(read_transcripts(spark, SF)), entities
+    )
+    _assert_df_equal(linked.select(*expected.columns), expected)
+
+
+def _bucket_counts(runner, stage):
+    rows = runner.read_stage(stage).groupBy(BUCKET_COL).count().collect()
+    return {r[BUCKET_COL]: r["count"] for r in rows}
+
+
+def test_manifest_counts_equal_committed_rows(spark, tmp_path_factory):
+    """Manifest n_rows (read from parquet footers) equals a Spark count
+    of each committed bucket and of a global stage — after a first run,
+    and after a partial recompute where one bucket's input changes and
+    another's recomputes to zero rows."""
+    out = str(tmp_path_factory.mktemp("count_out"))
+    from joern_spark.plans.manifest import input_fingerprint, with_bucket
+    from joern_spark.sources.transcripts import read_transcripts
+
+    t = with_bucket(read_transcripts(spark, SF), BUCKETS)
+    fps = input_fingerprint(t, ["conv_id", "turn_idx", "text"])
+    halved, emptied = sorted(fps)[:2]
+    m = Manifest(f"{out}/_manifest")
+
+    def check(runner):
+        counts = _bucket_counts(runner, "probe")
+        done = m.completed("probe")
+        assert set(done) == set(fps)
+        assert {b: r["n_rows"] for b, r in done.items()} == {
+            b: counts.get(b, 0) for b in fps
+        }
+        assert m.get("gprobe", 0)["n_rows"] == runner.read_stage("gprobe").count()
+
+    r1 = StageRunner(spark, out, BUCKETS)
+    r1.run_stage("probe", lambda p: t.where(F.col(BUCKET_COL).isin(p)), fps)
+    r1.run_global_stage("gprobe", lambda: t.where(F.col("turn_idx") < 3), "fp0")
+    check(r1)
+    first = {b: r["n_rows"] for b, r in m.completed("probe").items()}
+
+    fps2 = {**fps, halved: "changed:0", emptied: "changed:1"}
+    r2 = StageRunner(spark, out, BUCKETS)
+    r2.run_stage(
+        "probe",
+        lambda p: t.where(
+            F.col(BUCKET_COL).isin(p)
+            & (F.col(BUCKET_COL) != emptied)
+            & ((F.col(BUCKET_COL) != halved) | (F.col("turn_idx") % 2 == 0))
+        ),
+        fps2,
+    )
+    r2.run_global_stage("gprobe", lambda: t.where(F.col("turn_idx") < 1), "fp1")
+    check(r2)
+    done = m.completed("probe")
+    assert done[emptied]["n_rows"] == 0
+    assert 0 < done[halved]["n_rows"] < first[halved]
+    assert {b for b, r in done.items() if r["run_id"] == r2.run_id} == {
+        halved, emptied
+    }
+
+
+def test_footer_rows_reads_only_data_files(spark, tmp_path):
+    """Footer counting reads only `*.parquet` data files: never
+    `_SUCCESS`, `.crc` checksums, hidden or underscore files, other
+    extensions, or staging directories."""
+    d = tmp_path / "stage"
+    spark.range(5).coalesce(1).write.parquet(str(d))
+    names = set(os.listdir(d))
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    data = next(d.glob("part-*.parquet"))
+    shutil.copy(data, d / f".{data.name}")
+    shutil.copy(data, d / f"_{data.name}")
+    shutil.copy(data, d / f"{data.name}.tmp")
+    for staging in (".spark-staging-0/_bucket=0", "_temporary/0"):
+        (d / staging).mkdir(parents=True)
+        shutil.copy(data, d / staging / data.name)
+    assert footer_rows(str(d)) == 5
+    assert footer_rows(str(tmp_path / "missing")) == 0
 
 
 def test_changed_input_recomputes_bucket(spark, tmp_path_factory):

@@ -1278,17 +1278,20 @@ def graph_summary(edges: DataFrame) -> DataFrame:
 
     Scale shape: one degree aggregate over the symmetric edge table +
     a one-row reduction; mean_degree = 2E/N is one division of exact
-    BIGINTs."""
+    BIGINTs. An empty graph summarizes as (0, 0, 0, 0.0): the division
+    is branched on N = 0 (no 0/0 NaN, no ANSI error) and the max of no
+    degrees is 0, not null."""
     sym = edges.select(F.col("a").alias("src")).unionByName(
         edges.select(F.col("b").alias("src"))
     )
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ne = edges.count()
+    n = F.count(F.lit(1))
     return deg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
+        n.cast("long").alias("n_nodes"),
         F.lit(ne).cast("long").alias("n_edges"),
-        F.max("deg").cast("long").alias("max_degree"),
-        (
-            F.lit(2.0) * F.lit(float(ne)) / F.count(F.lit(1)).cast("double")
-        ).alias("mean_degree"),
+        F.coalesce(F.max("deg"), F.lit(0)).cast("long").alias("max_degree"),
+        F.when(n == 0, F.lit(0.0))
+        .otherwise(F.lit(2.0) * F.lit(float(ne)) / n.cast("double"))
+        .alias("mean_degree"),
     )

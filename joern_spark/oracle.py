@@ -2551,7 +2551,8 @@ WHERE s.size > 1
 
 def graph_summary_sql(sf: float) -> str:
     """One-row co-mention graph summary (mirror of rank.graph_summary):
-    same degree aggregate, 2E/N as the identical double division."""
+    same degree aggregate, 2E/N as the identical double division, and
+    the same (0, 0, 0, 0.0) row for an empty graph."""
     key = NORM.format(x="m.surface")
     return f"""
 WITH m AS ({mentions_sql(sf)}),
@@ -2566,7 +2567,9 @@ deg AS (SELECT src, count(*) AS deg FROM sym GROUP BY 1),
 ne AS (SELECT count(*) AS n FROM e)
 SELECT count(*)::BIGINT AS n_nodes,
        (SELECT n FROM ne)::BIGINT AS n_edges,
-       max(deg)::BIGINT AS max_degree,
-       2.0 * (SELECT n FROM ne)::DOUBLE / count(*)::DOUBLE AS mean_degree
+       coalesce(max(deg), 0)::BIGINT AS max_degree,
+       CASE WHEN count(*) = 0 THEN 0.0::DOUBLE
+            ELSE 2.0 * (SELECT n FROM ne)::DOUBLE / count(*)::DOUBLE
+       END AS mean_degree
 FROM deg
 """

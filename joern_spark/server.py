@@ -39,6 +39,12 @@ Endpoints (JSON in/out):
                               own query port, not a public sandbox —
                               bind stays on localhost by default)
 
+Every query endpoint goes through the workspace's held graph
+(`Workspace.sql` / `.cpg`): the active project's first request persists
+its served layers (workspace.HELD_LAYERS) and later requests read them.
+`/sql` holds the active project the same way, so SQL over `tpg_*` reads
+the held layers too.
+
 Responses: {"columns": [...], "rows": [[...], ...], "n": N} for queries,
 {"error": msg} with a 4xx/5xx status on failure. Rows are JSON-safe
 (timestamps/decimals/bytes stringified). `limit` caps the collect at
@@ -140,7 +146,9 @@ class QueryServer:
                         df = ws.sql(starter, **req.get("params", {}))
                         self._send(_df_payload(df, limit))
                     elif self.path == "/sql":
-                        ws.project()  # 400s cleanly when nothing is active
+                        # hold the active project like /query does;
+                        # 400s cleanly when nothing is active
+                        ws.project().hold(ws.spark)
                         df = ws.spark.sql(req["sql"])
                         self._send(_df_payload(df, limit))
                     elif self.path == "/flows":

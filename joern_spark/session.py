@@ -16,7 +16,24 @@ import os
 from pyspark.sql import SparkSession
 
 
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
+def default_driver_mem(mem_total_kb: int) -> str:
+    """Driver heap for a host with `mem_total_kb` of RAM: a quarter of
+    it, at most 16g, at least 1g. The heap is pre-touched in full (see
+    get_spark), so a fixed 16g makes the JVM exit on a 15 GB host."""
+    return f"{min(16 * 1024, max(1024, mem_total_kb // 4096))}m"
+
+
+def _mem_total_kb() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1])
+    raise OSError("no MemTotal line in /proc/meminfo")
+
+
+_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(
+    _mem_total_kb()
+)
 
 
 def default_parallelism() -> int:

@@ -449,6 +449,25 @@ def test_pagerank_empty_edges(spark):
     assert out.count() == 0 and out.columns == ["node", "rank"]
 
 
+def test_graph_summary_empty_edges(spark):
+    """An empty co-mention graph summarizes as (0, 0, 0, 0.0) — no 0/0
+    NaN mean degree and no null max degree — with the column types of a
+    non-empty summary."""
+    from joern_spark.operators.rank import graph_summary
+
+    out = graph_summary(spark.createDataFrame([], "a string, b string"))
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("n_nodes", "bigint"), ("n_edges", "bigint"),
+        ("max_degree", "bigint"), ("mean_degree", "double"),
+    ]
+    assert [tuple(r) for r in out.collect()] == [(0, 0, 0, 0.0)]
+    # a non-empty graph is unchanged: path x–y–z has 3 nodes, 2 edges
+    path = spark.createDataFrame([("x", "y"), ("y", "z")], "a string, b string")
+    assert [tuple(r) for r in graph_summary(path).collect()] == [
+        (3, 2, 2, 2.0 * 2 / 3)
+    ]
+
+
 def test_semantics_file_loads_and_overrides(spark, make_transcripts, tmp_path,
                                             monkeypatch):
     """Loadable semantics file (Semantics.g4 analog): the default table

@@ -1,19 +1,45 @@
 """Workspace/project lifecycle tests (WorkspaceManager.scala:29-126,
 Console.scala:177-232,306,394-396 analog): two corpora side by side,
-active-project view re-pointing, close/delete, manifest round-trip."""
+active-project view re-pointing, close/delete, manifest round-trip, and
+the held graph (served layers persisted on a project's first query)."""
 
 import json
+import threading
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark import StorageLevel
 
-from joern_spark.workspace import Workspace
+from joern_spark.workspace import HELD_LAYERS, Workspace
 
 SF_A = 0.0006  # ≈ 8k turns
 SF_B = 0.0003  # ≈ 4k turns
+FLOW_SRC = r"^Querying ([a-z_]+) for records about"
+FLOW_DST = r"^It is (-?[0-9]+)C and"
 
 
-def test_two_corpora_side_by_side(spark, tmp_path):
-    ws = Workspace(spark, tmp_path / "workspace.json")
+@pytest.fixture
+def new_workspace(spark, tmp_path):
+    """Workspace factory whose projects are all released at teardown:
+    Spark substitutes a held plan into any identical plan in the
+    session, so a layer one test leaves held would show up as held in
+    the next test's graph over the same corpus."""
+    made = []
+
+    def _new(name: str) -> Workspace:
+        ws = Workspace(spark, tmp_path / name)
+        made.append(ws)
+        return ws
+
+    yield _new
+    for ws in made:
+        for p in ws.projects:
+            p.release()
+
+
+def test_two_corpora_side_by_side(spark, new_workspace):
+    ws = new_workspace("workspace.json")
     ws.import_code(SF_A, "alpha")
     n_alpha = spark.table("tpg_turns").count()
     ws.import_code(SF_B, "beta")
@@ -44,9 +70,9 @@ def test_two_corpora_side_by_side(spark, tmp_path):
     assert (both.a, both.b) == (n_alpha, n_beta)
 
 
-def test_close_delete_and_manifest_roundtrip(spark, tmp_path):
+def test_close_delete_and_manifest_roundtrip(spark, tmp_path, new_workspace):
     path = tmp_path / "workspace.json"
-    ws = Workspace(spark, path)
+    ws = new_workspace("workspace.json")
     ws.import_code(SF_A, "alpha")
     ws.import_code(SF_B, "beta")
 
@@ -59,7 +85,7 @@ def test_close_delete_and_manifest_roundtrip(spark, tmp_path):
 
     # the registry survives in the manifest (project.json analog)
     assert set(json.loads(path.read_text())) == {"alpha", "beta"}
-    ws2 = Workspace(spark, path)
+    ws2 = new_workspace("workspace.json")
     assert {p.name for p in ws2.projects} == {"alpha", "beta"}
     assert not ws2.project("beta").is_open  # lazy — nothing built yet
     ws2.open("beta")
@@ -76,7 +102,7 @@ def test_close_delete_and_manifest_roundtrip(spark, tmp_path):
         ws2.import_code(SF_A, "bad name!")
 
 
-def test_http_query_server(spark, tmp_path):
+def test_http_query_server(spark, new_workspace):
     """BridgeBase HTTP-server analog (BridgeBase.scala:403-418): boot the
     query server over a workspace and drive it with real HTTP requests —
     starters listing, two queries (a named starter with params and raw
@@ -86,10 +112,8 @@ def test_http_query_server(spark, tmp_path):
 
     from joern_spark.server import QueryServer
 
-    ws = Workspace(spark, tmp_path / "ws.json")
+    ws = new_workspace("ws.json")
     ws.import_code(SF_B, "srv")
-    srv = QueryServer(ws).start()
-    base = f"http://{srv.host}:{srv.port}"
 
     def get(path):
         try:
@@ -108,19 +132,18 @@ def test_http_query_server(spark, tmp_path):
         except urllib.error.HTTPError as e:
             return e.code, _json.loads(e.read())
 
+    srv = QueryServer(ws).start()
     try:
+        base = f"http://{srv.host}:{srv.port}"
         # discovery surfaces
         status, starters = get("/starters")
         assert status == 200 and "conversations" in starters
         status, projects = get("/projects")
         assert status == 200 and projects["active"] == "srv"
+        assert not ws.project("srv").is_held
 
-        # query 1: a named starter
-        status, out = post("/query", {"starter": "conversations", "limit": 5})
-        assert status == 200 and out["n"] == 5
-        assert "conv_id" in out["columns"]
-
-        # query 2: raw SQL over the registered views
+        # query 1: raw SQL over the registered views — the first query
+        # holds the active project, like /query does
         status, out = post(
             "/sql",
             {"sql": "SELECT count(*) AS n FROM tpg_turns"},
@@ -128,6 +151,12 @@ def test_http_query_server(spark, tmp_path):
         assert status == 200
         n_http = out["rows"][0][0]
         assert n_http == spark.table("tpg_turns").count() > 0
+        assert ws.project("srv").is_held
+
+        # query 2: a named starter
+        status, out = post("/query", {"starter": "conversations", "limit": 5})
+        assert status == 200 and out["n"] == 5
+        assert "conv_id" in out["columns"]
 
         # parameterized starter round-trip
         status, out = post(
@@ -147,8 +176,8 @@ def test_http_query_server(spark, tmp_path):
         status, out = post(
             "/flows",
             {
-                "src_pattern": r"^Querying ([a-z_]+) for records about",
-                "dst_pattern": r"^It is (-?[0-9]+)C and",
+                "src_pattern": FLOW_SRC,
+                "dst_pattern": FLOW_DST,
                 "max_depth": 3,
                 "limit": 10,
             },
@@ -235,7 +264,7 @@ def test_http_query_server(spark, tmp_path):
         srv.shutdown()
 
 
-def test_flow_walk_cache_across_sessions(spark, tmp_path):
+def test_flow_walk_cache_across_sessions(spark, tmp_path, new_workspace):
     """Flow-path result cache (Engine's held-task reuse analog, made
     durable): the first cached_walk computes and persists the keep-all
     walk under the workspace; a SECOND workspace over the same manifest
@@ -246,7 +275,7 @@ def test_flow_walk_cache_across_sessions(spark, tmp_path):
     from joern_spark.console import flows as console_flows
 
     manifest = tmp_path / "ws.json"
-    ws1 = Workspace(spark, manifest)
+    ws1 = new_workspace("ws.json")
     ws1.import_code(SF_B, "cachep")
     walk1, hit1 = ws1.cached_walk(max_depth=3, max_crossings=1)
     assert hit1 is False
@@ -260,7 +289,7 @@ def test_flow_walk_cache_across_sessions(spark, tmp_path):
     assert "cachep" in m
 
     # a second session over the same manifest: HIT, identical rows
-    ws2 = Workspace(spark, manifest)
+    ws2 = new_workspace("ws.json")
     ws2.open("cachep")
     walk2, hit2 = ws2.cached_walk(max_depth=3, max_crossings=1)
     assert hit2 is True
@@ -272,8 +301,7 @@ def test_flow_walk_cache_across_sessions(spark, tmp_path):
     assert hit3 is False
 
     # pattern flows derived from the cache == fresh-walk console flows
-    src_p = r"^Querying ([a-z_]+) for records about"
-    dst_p = r"^It is (-?[0-9]+)C and"
+    src_p, dst_p = FLOW_SRC, FLOW_DST
     via_cache = ws2.flows(src_p, dst_p, max_depth=3, max_crossings=1)
     fresh = console_flows(ws2.cpg, src_p, dst_p, max_depth=3,
                           max_crossings=1)
@@ -288,3 +316,128 @@ def test_flow_walk_cache_across_sessions(spark, tmp_path):
                            max_crossings=1)
     assert fallback.exceptAll(direct).count() == 0
     assert direct.exceptAll(fallback).count() == 0
+
+
+# -- held graph ------------------------------------------------------------
+
+
+def _rows(df) -> Counter:
+    return Counter(repr(tuple(r)) for r in df.collect())
+
+
+def _levels(g) -> dict:
+    from joern_spark.console import VIEWS
+
+    return {layer: getattr(g, layer).storageLevel for layer in VIEWS}
+
+
+def _held_levels() -> dict:
+    from joern_spark.console import VIEWS
+
+    return {
+        layer: StorageLevel.MEMORY_AND_DISK
+        if layer in HELD_LAYERS else StorageLevel.NONE
+        for layer in VIEWS
+    }
+
+
+def _starter_params(spark) -> dict:
+    from joern_spark import generator as G
+
+    hub = G.normalize_surface(G.HUB_CITIES[0])
+    conv = spark.table("tpg_conversations").orderBy("conv_id").first().conv_id
+    return {
+        "conversations": {},
+        "calls_of_tool": {"tool": G.TOOLS[0]},
+        "mentions_of_kind": {"kind": "location"},
+        "entities_of_conversation": {"conv_id": conv},
+        "facts_about": {"key": hub},
+        "comentions_of": {"key": hub},
+    }
+
+
+def test_held_graph_same_rows_and_lifecycle(spark, new_workspace):
+    """A project holds nothing until its first query; the first query
+    persists exactly HELD_LAYERS (never `edges`), every starter,
+    heavy_hitters and flows return the rows they returned before the
+    hold, and close / delete / a re-import under the same name leave
+    every layer unpersisted. Reference rows are collected BEFORE the
+    first hold: a graph planned after it would read the held layers."""
+    from joern_spark import console
+
+    assert "edges" not in HELD_LAYERS
+    none = {layer: StorageLevel.NONE for layer in _held_levels()}
+    ws = new_workspace("ws.json")
+    ws.import_code(SF_B, "heldp")
+    p = ws.project()
+    g = p.graph(spark)
+    assert not p.is_held and _levels(g) == none
+
+    params = _starter_params(spark)
+    assert set(params) == set(console.STARTERS)
+    want = {name: _rows(console.sql(spark, name, **kw))
+            for name, kw in params.items()}
+    want_hh = _rows(console.heavy_hitters(g, k=10))
+    want_flows = _rows(console.flows(g, FLOW_SRC, FLOW_DST, max_depth=3))
+    assert all(want.values()) and want_hh and want_flows
+    assert _levels(g) == none  # reading the lazy graph holds nothing
+
+    got = {name: _rows(ws.sql(name, **kw)) for name, kw in params.items()}
+    assert p.is_held and ws.cpg is g and _levels(g) == _held_levels()
+    assert got == want
+    assert _rows(console.heavy_hitters(ws.cpg, k=10)) == want_hh
+    assert _rows(console.flows(ws.cpg, FLOW_SRC, FLOW_DST, max_depth=3)) \
+        == want_flows
+    # starters read the held rows, not the parquet pipeline
+    plan = ws.sql("facts_about", **params["facts_about"])._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan
+
+    ws.close()
+    assert not p.is_held and not p.is_open and _levels(g) == none
+
+    ws.open("heldp")
+    g2 = ws.cpg
+    assert _levels(g2) == _held_levels()
+    ws.import_code(SF_B, "heldp")  # re-import under the same name
+    assert _levels(g2) == none
+    assert _levels(ws.project().graph(spark)) == none  # not queried yet
+
+    g3 = ws.cpg
+    assert _levels(g3) == _held_levels()
+    ws.delete("heldp")
+    assert _levels(g3) == none
+
+
+def test_held_graph_concurrent_first_queries(spark, new_workspace, monkeypatch):
+    """Eight threads send the first query to a fresh project at once:
+    every result equals the serial result and each held layer is
+    persisted exactly once."""
+    from joern_spark import console
+
+    ws = new_workspace("ws.json")
+    ws.import_code(SF_B, "conc")
+    g = ws.project().graph(spark)
+    key = _starter_params(spark)["facts_about"]
+    serial = _rows(console.sql(spark, "facts_about", **key))
+    assert serial
+
+    frame_cls = type(g.transcripts)  # the concrete (classic) DataFrame
+    persisted, persist = [], frame_cls.persist
+
+    def counting_persist(df, *args, **kwargs):
+        persisted.append(id(df))
+        return persist(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", counting_persist)
+    start = threading.Barrier(8)
+
+    def first_query(_):
+        start.wait(timeout=120)
+        return _rows(ws.sql("facts_about", **key))
+
+    with ThreadPoolExecutor(8) as pool:
+        results = list(pool.map(first_query, range(8)))
+    assert all(r == serial for r in results)
+    assert sorted(persisted) == sorted(id(getattr(g, x)) for x in HELD_LAYERS)
+    assert _levels(g) == _held_levels()

@@ -425,11 +425,35 @@ def sessionize_lag(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
 RFM_QS = [0.3333333333333333, 0.6666666666666666]
 
 
+def rfm_user_scores(events: DataFrame) -> DataFrame:
+    """(user_id, r, f, m) — the per-user RFM integers `rfm_segments`
+    cuts. Cents round to nearest: 0.29 is 28.999999999999996 cents
+    in binary, which truncation would make 28."""
+    horizon = events.agg(F.max(F.to_date("ts")).alias("h"))
+    return (
+        events.groupBy("user_id")
+        .agg(
+            F.max(F.to_date("ts")).alias("last_day"),
+            F.count(F.lit(1)).cast("long").alias("f"),
+            F.sum(
+                F.round(F.col("value") * F.lit(100.0)).cast("long")
+            ).cast("long").alias("m"),
+        )
+        .crossJoin(F.broadcast(horizon))
+        .select(
+            "user_id",
+            F.datediff(F.col("h"), F.col("last_day")).cast("long").alias("r"),
+            "f",
+            "m",
+        )
+    )
+
+
 def rfm_segments(events: DataFrame) -> DataFrame:
     """(r_seg, f_seg, m_seg, n_users) — RFM segmentation of the user
     base: per user recency (days since last event, vs the corpus
     horizon), frequency (event count) and monetary (integer cents —
-    per-event floor(value·100) summed as exact BIGINTs, so the sum is
+    per-event round(value·100) summed as exact BIGINTs, so the sum is
     order-free), each cut into low/mid/high at the tercile points of
     the MERGEABLE log-linear histogram sketch (operators/sketch) —
     the scale-correct substitute for a global ntile(): an exact
@@ -445,25 +469,8 @@ def rfm_segments(events: DataFrame) -> DataFrame:
     census aggregate. Integer-only except the q literals."""
     from joern_spark.operators.sketch import hist_quantiles, hist_registers
 
-    horizon = events.agg(F.max(F.to_date("ts")).alias("h"))
-    per_user = (
-        events.groupBy("user_id")
-        .agg(
-            F.max(F.to_date("ts")).alias("last_day"),
-            F.count(F.lit(1)).cast("long").alias("f"),
-            F.sum(
-                F.floor(F.col("value") * F.lit(100.0)).cast("long")
-            ).cast("long").alias("m"),
-        )
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            "user_id",
-            F.datediff(F.col("h"), F.col("last_day")).cast("long").alias("r"),
-            "f",
-            "m",
-        )
-        .localCheckpoint(eager=False)  # three sketch consumers + classify
-    )
+    # three sketch consumers + classify
+    per_user = rfm_user_scores(events).localCheckpoint(eager=False)
 
     def cuts(col: str):
         qs = hist_quantiles(

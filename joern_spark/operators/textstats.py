@@ -1243,6 +1243,9 @@ def rank_agreement(
     Python and emitted as the same double literals into both engines'
     CASE expressions; the per-query sum folds ascending-sorted.
 
+    Every query ranked by both inputs gets a row: lists that share no
+    document give n_common 0, jaccard_k 0.0 and rbo 0.0.
+
     Scale shape: inputs are top-k tables (dimension-sized); one
     broadcast-sized inner join + one fold. Full-corpus cost is zero."""
     w = {}
@@ -1269,23 +1272,26 @@ def rank_agreement(
     )
     na = ra.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_a"))
     nb = rb.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_b"))
-    return (
+    agg = (
         both.select("query_id", contrib.alias("w"))
         .groupBy("query_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_common"),
             sorted_sum.alias("rbo"),
         )
-        .join(F.broadcast(na), "query_id")
-        .join(F.broadcast(nb), "query_id")
+    )
+    n_common = F.coalesce(F.col("n_common"), F.lit(0).cast("long"))
+    return (
+        na.join(F.broadcast(nb), "query_id")
+        .join(agg, "query_id", "left")
         .select(
             "query_id",
-            "n_common",
+            n_common.alias("n_common"),
             (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+                n_common.cast("double")
+                / (F.col("n_a") + F.col("n_b") - n_common)
             ).alias("jaccard_k"),
-            "rbo",
+            F.coalesce(F.col("rbo"), F.lit(0.0)).alias("rbo"),
         )
     )
 

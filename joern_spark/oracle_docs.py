@@ -2125,8 +2125,9 @@ def rank_agreement_sql() -> str:
     """Mirror of textstats.rank_agreement over the BM25 vs QLD top-k
     lists: both oracles as derived tables, the per-doc RBO contribution
     CASE generated from the SAME Python-computed w(m) double literals,
-    ascending-sorted fold, identical Jaccard division. Queries sharing
-    zero documents emit no row on both engines (inner-join semantics)."""
+    ascending-sorted fold, identical Jaccard division. Rows come from
+    the per-query count tables, so queries sharing zero documents get
+    n_common 0, jaccard_k 0.0 and rbo 0.0 on both engines."""
     from joern_spark.operators.textstats import BM25_TOP_K, RBO_P
 
     k, p = BM25_TOP_K, RBO_P
@@ -2156,10 +2157,11 @@ agg AS (
          list_sum(list_sort(list(w))) AS rbo
   FROM both_l GROUP BY 1
 )
-SELECT a.query_id, a.n_common,
-       a.n_common::DOUBLE / (na.n_a + nb.n_b - a.n_common) AS jaccard_k,
-       a.rbo
-FROM agg a JOIN na USING (query_id) JOIN nb USING (query_id)
+SELECT query_id, coalesce(a.n_common, 0)::BIGINT AS n_common,
+       coalesce(a.n_common, 0)::DOUBLE
+         / (na.n_a + nb.n_b - coalesce(a.n_common, 0)) AS jaccard_k,
+       coalesce(a.rbo, 0.0) AS rbo
+FROM na JOIN nb USING (query_id) LEFT JOIN agg a USING (query_id)
 """
 
 
@@ -2233,7 +2235,7 @@ def cluster_quality_sql() -> str:
 
 def rfm_sql() -> str:
     """RFM segment census (mirror of events.rfm_segments): identical
-    per-user integers (recency days, count, floor-cents sum), the same
+    per-user integers (recency days, count, rounded-cents sum), the same
     log-linear bucket arithmetic and tercile pick as the len_hist
     oracle, identical low/mid/high classification."""
     from joern_spark.operators.events import RFM_QS
@@ -2279,7 +2281,7 @@ WITH pu AS MATERIALIZED (
          date_diff('day', CAST(max(ts) AS DATE),
                    (SELECT CAST(max(ts) AS DATE) FROM events)) AS r,
          count(*) AS f,
-         sum(CAST(floor(value * 100.0) AS BIGINT)) AS m
+         sum(CAST(round(value * 100.0) AS BIGINT)) AS m
   FROM events GROUP BY user_id
 ),
 {joined}

@@ -13,11 +13,26 @@ compaction over the streamed raw tables — the classic lambda-free
 "stream the cheap 95%, batch the stateful 5%" split. `run_increment`
 uses Trigger.AvailableNow so each invocation drains exactly the new
 files then stops — the pattern for cron-scheduled incremental jobs.
+
+Every streaming query in this package runs through `drain`: one
+AvailableNow query over a checkpoint that either appends to a parquet
+path or hands each micro-batch to a fold, then stops. Every fold keeps
+its state in a `SnapshotStore` — the reference's "apply a diff
+atomically" as a new immutable snapshot directory
+`<prefix>-<batch:06d>-<nonce>` behind a pointer file. A snapshot is
+written once every table in it carries Spark's `_SUCCESS` marker; it is
+committed once the pointer names it, and the pointer is the only commit
+point, so readers never see a partial or uncommitted fold. Each commit
+then keeps the newest `KEEP_SNAPSHOTS` written snapshots and sweeps torn
+ones, so a store's disk use stays bounded however long the stream runs.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,31 +40,194 @@ from pyspark.sql import functions as F
 from joern_spark import schemas as S
 from joern_spark.operators.extract import extract_triples_raw
 
-
-def read_transcript_stream(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = (
-        spark.readStream.format("parquet")
-        .schema(S.TRANSCRIPT_SCHEMA)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(landing_dir)
-
-
 # The columns sessionization needs from an event landing table; extra
 # columns in a real lake table are pruned by the reader schema.
 EVENT_STREAM_SCHEMA = "event_id bigint, ts timestamp_ntz, user_id string"
+DOC_STREAM_SCHEMA = "doc_id bigint, text string, lang string, source string"
 
 
-def read_event_stream(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
+def read_stream(
+    spark: SparkSession, landing_dir: str, schema: str = S.TRANSCRIPT_SCHEMA
 ) -> DataFrame:
-    reader = spark.readStream.format("parquet").schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(landing_dir)
+    """The landing directory as a parquet file stream with `schema`."""
+    return spark.readStream.format("parquet").schema(schema).load(landing_dir)
+
+
+def drain(
+    df: DataFrame, checkpoint_dir: str, *, fold=None, path: str | None = None
+) -> None:
+    """Drain everything landed since the last drain of `checkpoint_dir`,
+    exactly once, then stop: append the rows of `df` to the parquet
+    table at `path`, or pass each micro-batch to `fold(batch_df,
+    batch_id)`. The file-source offset log under the checkpoint is the
+    resume manifest; `fold` sees each batch at least once."""
+    w = df.writeStream.option("checkpointLocation", checkpoint_dir)
+    if fold is not None:
+        w = w.foreachBatch(fold)
+    else:
+        w = w.format("parquet").option("path", path).outputMode("append")
+    w.trigger(availableNow=True).start().awaitTermination()
+
+
+# Written snapshots a store keeps after each commit: the pointer's own
+# plus two predecessors. That is the time-travel window `as_of` serves,
+# and a reader that resolved the pointer keeps its files through the
+# next two commits, not just until the next one.
+KEEP_SNAPSHOTS = 3
+
+
+class Snapshot(NamedTuple):
+    tables: dict[str, DataFrame]
+    batch_id: int
+    name: str
+
+
+def _batch_id(name: str) -> int:
+    return int(name.split("-")[1])
+
+
+class SnapshotStore:
+    """Immutable table snapshots behind an atomically replaced pointer
+    (write-tmp + rename — the Iceberg metadata-pointer pattern at
+    file-system scale), the one implementation of the commit protocol.
+
+    Under `state_dir`, each snapshot is the directory
+    `<prefix>-<batch:06d>-<nonce>` holding one parquet table per name in
+    `tables`; the name "" puts a single table at the snapshot root. The
+    file `pointer` holds the committed snapshot's name. Names embed the
+    zero-padded batch id, so lexicographic order is fold order; two
+    written snapshots of one batch id (a crash between write and pointer
+    commit, then replay) hold identical content by the fold's replay
+    argument, and the lexicographically last wins deterministically.
+
+    `spark` is needed only by the methods that return DataFrames."""
+
+    def __init__(
+        self,
+        spark: SparkSession | None,
+        state_dir: str,
+        prefix: str,
+        pointer: str,
+        tables: tuple[str, ...],
+        schema: str | None = None,
+    ):
+        self.spark = spark
+        self.dir = state_dir
+        self.prefix = prefix
+        self.pointer = os.path.join(state_dir, pointer)
+        self.tables = tables
+        self.schema = schema
+
+    def _dirs(self) -> list[str]:
+        if not os.path.isdir(self.dir):
+            return []
+        return sorted(
+            n for n in os.listdir(self.dir)
+            if n.startswith(self.prefix + "-")
+            and os.path.isdir(os.path.join(self.dir, n))
+        )
+
+    def _current(self) -> str | None:
+        if not os.path.exists(self.pointer):
+            return None
+        with open(self.pointer) as f:
+            return f.read().strip()
+
+    def _load(self, name: str) -> Snapshot:
+        reader = self.spark.read
+        if self.schema is not None:
+            reader = reader.schema(self.schema)
+        return Snapshot(
+            {t: reader.parquet(os.path.join(self.dir, name, t)) for t in self.tables},
+            _batch_id(name),
+            name,
+        )
+
+    def committed(self) -> list[str]:
+        """Written snapshot names, oldest first: every table carries
+        `_SUCCESS`. A crash mid-write leaves a torn directory that time
+        travel and retention must not count."""
+        return [
+            n for n in self._dirs()
+            if all(
+                os.path.exists(os.path.join(self.dir, n, t, "_SUCCESS"))
+                for t in self.tables
+            )
+        ]
+
+    def read(self) -> Snapshot | None:
+        """The snapshot the pointer names, or None before the first commit."""
+        name = self._current()
+        return None if name is None else self._load(name)
+
+    def as_of(self, batch_id: int) -> Snapshot | None:
+        """The last written snapshot whose batch id is ≤ `batch_id`, among
+        the retained ones — time travel over the snapshot history (the
+        Iceberg snapshot-read analog). Nothing past the pointer's batch
+        is visible: a snapshot whose pointer was never committed is not."""
+        cur = self._current()
+        if cur is None:
+            return None
+        upto = min(batch_id, _batch_id(cur))
+        names = [n for n in self.committed() if _batch_id(n) <= upto]
+        return self._load(names[-1]) if names else None
+
+    def commit(self, batch_id: int, tables: dict[str, DataFrame]) -> None:
+        """Write every table of a new snapshot, atomically repoint to it,
+        then expire all but the newest KEEP_SNAPSHOTS."""
+        name = f"{self.prefix}-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
+        for t in self.tables:
+            tables[t].write.mode("overwrite").parquet(os.path.join(self.dir, name, t))
+        tmp = f"{self.pointer}.tmp{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            f.write(name)
+        os.replace(tmp, self.pointer)
+        # The merged tables are written: no lazy read of an older
+        # snapshot is still pending in this fold, so expiry cannot pull
+        # files out from under it.
+        self.expire(KEEP_SNAPSHOTS)
+
+    def expire(self, keep_last: int) -> list[str]:
+        """Retention GC (the Iceberg expire_snapshots analog): delete all
+        but the newest `keep_last` written snapshots, never the one the
+        pointer names. Torn directories never count toward keep_last and
+        are always swept. Returns the deleted directory names."""
+        current = self._current()
+        committed = self.committed()
+        torn = [n for n in self._dirs() if n not in committed]
+        old = committed[: max(0, len(committed) - keep_last)]
+        doomed = [n for n in torn + old if n != current]
+        for n in doomed:
+            shutil.rmtree(os.path.join(self.dir, n), ignore_errors=True)
+        return doomed
+
+
+# prefix -> (pointer file, tables); "" is a single table at the snapshot
+# root. These names are the on-disk layout every reader depends on.
+_LAYOUT = {
+    "cmap": ("CURRENT", ("",)),
+    "walk": ("CURRENT_WALK", ("paths", "edges", "seeds")),
+    "cm": ("CURRENT_CM", ("",)),
+    "hll": ("CURRENT_HLL", ("",)),
+    "bloom": ("CURRENT_BLOOM", ("",)),
+    "hist": ("CURRENT_HIST", ("",)),
+    "mix": ("CURRENT_MIX", ("",)),
+    "dedup": ("CURRENT_DEDUP", ("bands", "pairs")),
+    "tindex": ("CURRENT_TINDEX", ("tf", "dl", "dfreq", "cf", "stats")),
+    "burst": ("CURRENT_BURST", ("",)),
+}
+CMAP_SCHEMA = "entity_key string, canon string"
+
+
+def _store(spark, state_dir: str, prefix: str, schema: str | None = None):
+    return SnapshotStore(spark, state_dir, prefix, *_LAYOUT[prefix], schema=schema)
+
+
+def _read_table(spark: SparkSession, state_dir: str, prefix: str):
+    """(the current snapshot's one table, its batch id), or (None, -1)
+    before the first commit."""
+    snap = _store(spark, state_dir, prefix).read()
+    return (snap.tables[""], snap.batch_id) if snap else (None, -1)
 
 
 def run_increment(
@@ -59,17 +237,11 @@ def run_increment(
     extraction into the raw-triples table, exactly once, then stop.
     Re-invoking after new files land processes only the delta (the
     file-source offset log under checkpoint_dir is the resume manifest)."""
-    stream = read_transcript_stream(spark, landing_dir)
-    triples = extract_triples_raw(stream)
-    q = (
-        triples.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        extract_triples_raw(read_stream(spark, landing_dir)),
+        checkpoint_dir,
+        path=out_dir,
     )
-    q.awaitTermination()
 
 
 def streamed_triples(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -82,37 +254,10 @@ def streamed_triples(spark: SparkSession, out_dir: str) -> DataFrame:
 
 # --- incremental entity resolution (canonical-map maintenance) ----------------
 
-_POINTER = "CURRENT"
-
-
-def _commit_pointer(state_dir: str, snapshot_dir: str) -> None:
-    """Atomically repoint the map to a new snapshot (write-tmp + rename —
-    the Iceberg metadata-pointer pattern at file-system scale)."""
-    import uuid
-
-    p = os.path.join(state_dir, _POINTER)
-    tmp = p + f".tmp{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(os.path.basename(snapshot_dir))
-    os.replace(tmp, p)
-
 
 def _snapshots(state_dir: str) -> list[str]:
-    """COMMITTED snapshot directory names, oldest first (names embed the
-    zero-padded batch id, so lexicographic order IS fold order). Only
-    dirs carrying Spark's _SUCCESS marker count — a crash mid-write
-    leaves a torn dir that time travel and retention must not see. Two
-    committed dirs for the same batch id (crash between write and
-    pointer commit, then replay) hold identical content by the fold's
-    idempotence; the lexicographically last wins deterministically."""
-    if not os.path.isdir(state_dir):
-        return []
-    return sorted(
-        n
-        for n in os.listdir(state_dir)
-        if n.startswith("cmap-")
-        and os.path.exists(os.path.join(state_dir, n, "_SUCCESS"))
-    )
+    """Written canonical-map snapshot names, oldest first."""
+    return _store(None, state_dir, "cmap").committed()
 
 
 def read_canonical_map(
@@ -121,58 +266,17 @@ def read_canonical_map(
     """The current canonical-map snapshot, or None before the first fold.
 
     `as_of_batch` reads the LAST snapshot whose fold batch id is ≤ the
-    given id — time travel over the immutable snapshot history, the
-    Iceberg snapshot-read analog (each fold is a commit; the pointer
-    file is the metadata pointer)."""
-    if as_of_batch is not None:
-        cands = [
-            n for n in _snapshots(state_dir)
-            if int(n.split("-")[1]) <= as_of_batch
-        ]
-        if not cands:
-            return None
-        name = cands[-1]
-    else:
-        p = os.path.join(state_dir, _POINTER)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            name = f.read().strip()
-    return spark.read.schema("entity_key string, canon string").parquet(
-        os.path.join(state_dir, name)
-    )
+    given id — time travel over the retained snapshot history."""
+    store = _store(spark, state_dir, "cmap", CMAP_SCHEMA)
+    snap = store.read() if as_of_batch is None else store.as_of(as_of_batch)
+    return None if snap is None else snap.tables[""]
 
 
 def expire_snapshots(state_dir: str, keep_last: int = 3) -> list[str]:
-    """Retention GC: delete all but the newest `keep_last` committed
-    snapshots, never the one the pointer references (the Iceberg
-    expire_snapshots analog). Torn snapshot dirs (no _SUCCESS marker —
-    a crash mid-write) are always garbage-collected and never count
-    toward keep_last. Returns the deleted directory names."""
-    import shutil
-
-    p = os.path.join(state_dir, _POINTER)
-    current = None
-    if os.path.exists(p):
-        with open(p) as f:
-            current = f.read().strip()
-    committed = _snapshots(state_dir)
-    torn = [
-        n
-        for n in os.listdir(state_dir)
-        if os.path.isdir(os.path.join(state_dir, n))
-        and n.startswith("cmap-")
-        and n not in committed
-        and n != current
-    ] if os.path.isdir(state_dir) else []
-    doomed = torn + (
-        [n for n in committed[:-keep_last] if n != current]
-        if keep_last
-        else [n for n in committed if n != current]
-    )
-    for n in doomed:
-        shutil.rmtree(os.path.join(state_dir, n), ignore_errors=True)
-    return doomed
+    """Retention GC over the canonical-map store (`SnapshotStore.expire`);
+    every commit already runs it with KEEP_SNAPSHOTS. Returns the deleted
+    directory names."""
+    return _store(None, state_dir, "cmap").expire(keep_last)
 
 
 def run_alias_increment(
@@ -182,23 +286,19 @@ def run_alias_increment(
     and fold their SAME_AS pairs into the persisted canonical map via
     `canonicalize.merge_canonical_map` — only components touched by the
     delta are re-solved, the historical pair set is never replayed.
-    Snapshots are immutable directories behind an atomically-replaced
-    pointer file (readers never observe a partial map).
 
     Exactly-once note: foreachBatch side effects are at-least-once under
     crash-rerun (the offset commit is separate), but the fold is
     IDEMPOTENT — merging pairs already present in the map is a no-op by
     the merge==one-shot theorem (tested) — so at-least-once delivery
     still converges to the exact batch answer."""
-    import uuid
-
     from joern_spark.operators.canonicalize import (
         connected_components,
         merge_canonical_map,
         same_as_pairs,
     )
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "cmap")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         pairs = same_as_pairs(batch_df).localCheckpoint(eager=True)
@@ -210,42 +310,15 @@ def run_alias_increment(
             if cur is not None
             else connected_components(pairs)
         )
-        snap = os.path.join(
-            state_dir, f"cmap-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        _commit_pointer(state_dir, snap)
+        store.commit(batch_id, {"": merged})
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
 
 
 # ---------------------------------------------------------------------------
 # Streaming flow-walk increments: fold newly-landed conversations into a
 # persisted keep='all' walk via hetero.incremental_paths — the streaming
-# twin of the workspace flow cache (the same snapshot-behind-a-pointer
-# discipline as the canonical-map increments above).
-
-_WALK_POINTER = "CURRENT_WALK"
-
-
-def _walk_snapshots(state_dir: str) -> list[str]:
-    if not os.path.isdir(state_dir):
-        return []
-    return sorted(
-        n
-        for n in os.listdir(state_dir)
-        if n.startswith("walk-")
-        and os.path.exists(os.path.join(state_dir, n, "paths", "_SUCCESS"))
-        and os.path.exists(os.path.join(state_dir, n, "edges", "_SUCCESS"))
-        and os.path.exists(os.path.join(state_dir, n, "seeds", "_SUCCESS"))
-    )
+# twin of the workspace flow cache.
 
 
 def read_walk(
@@ -253,21 +326,8 @@ def read_walk(
 ) -> "tuple[DataFrame, DataFrame, DataFrame] | None":
     """(paths, edges, seeds) of the current walk snapshot, or None before
     the first fold."""
-    p = os.path.join(state_dir, _WALK_POINTER)
-    if os.path.exists(p):
-        with open(p) as f:
-            name = f.read().strip()
-    else:
-        snaps = _walk_snapshots(state_dir)
-        if not snaps:
-            return None
-        name = snaps[-1]
-    base = os.path.join(state_dir, name)
-    return (
-        spark.read.parquet(os.path.join(base, "paths")),
-        spark.read.parquet(os.path.join(base, "edges")),
-        spark.read.parquet(os.path.join(base, "seeds")),
-    )
+    snap = _store(spark, state_dir, "walk").read()
+    return None if snap is None else tuple(snap.tables.values())
 
 
 def run_walk_increment(
@@ -286,27 +346,20 @@ def run_walk_increment(
     only the seeds whose cached paths touch a delta endpoint re-walk;
     the historical path set is never replayed.
 
-    Snapshots are immutable dirs (`walk-<batch>-<uuid>/{paths,edges,
-    seeds}`) behind an atomically-replaced pointer. At-least-once
-    replay is idempotent: a replayed batch's edges anti-join away
-    against the accumulated edge table, leaving an empty delta, and
-    incremental_paths with an empty delta is a pure cache filter
-    (tested)."""
-    import uuid
-
+    At-least-once replay is idempotent: a replayed batch's edges
+    anti-join away against the accumulated edge table, leaving an empty
+    delta, and incremental_paths with an empty delta is a pure cache
+    filter (tested)."""
     from joern_spark.functions.hetero import (
         expand_paths_hetero,
         incremental_paths,
     )
-    from joern_spark.operators.extract import (
-        extract_mentions,
-        extract_triples_raw,
-    )
+    from joern_spark.operators.extract import extract_mentions
     from joern_spark.operators.link import link_mentions
     from joern_spark.queries import hetero_edges_from
     from joern_spark.sources.transcripts import read_entities
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "walk")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -348,48 +401,24 @@ def run_walk_increment(
                 prev_paths, edges_all, new_delta, seeds_all,
                 max_depth=max_depth, max_crossings=max_crossings,
             )
-        snap = os.path.join(
-            state_dir, f"walk-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
+        store.commit(
+            batch_id, {"paths": paths, "edges": edges_all, "seeds": seeds_all}
         )
-        paths.write.mode("overwrite").parquet(os.path.join(snap, "paths"))
-        edges_all.write.mode("overwrite").parquet(os.path.join(snap, "edges"))
-        seeds_all.write.mode("overwrite").parquet(os.path.join(snap, "seeds"))
-        tmp = os.path.join(state_dir, _WALK_POINTER + f".tmp{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _WALK_POINTER))
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
 
 
 # ---------------------------------------------------------------------------
 # Streaming Count-Min increments: sketch each newly-landed micro-batch
 # independently and cell-wise sum it into a persisted cell table —
 # cm_merge associativity makes the fold of per-batch sketches equal the
-# one-shot sketch (proven in tests/test_sketch.py). Same
-# snapshot-behind-a-pointer discipline as the canonical-map increments.
-
-_CM_POINTER = "CURRENT_CM"
+# one-shot sketch (proven in tests/test_sketch.py).
 
 
 def read_cm_sketch(spark: SparkSession, state_dir: str):
     """The currently-committed cell table (r, bucket, c), or None before
     the first drain. Returns (DataFrame | None, last_folded_batch_id)."""
-    p = os.path.join(state_dir, _CM_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    # snapshot names embed the zero-padded batch id: cm-<id>-<nonce>
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "cm")
 
 
 def run_cm_increment(
@@ -408,12 +437,9 @@ def run_cm_increment(
     rewrite the same batch's snapshot (same inputs, same cells) before
     committing the pointer, so readers converge to the exact batch
     answer either way."""
-    import uuid
-
-    from joern_spark.operators.extract import extract_triples_raw
     from joern_spark.operators.sketch import cm_merge, cm_sketch
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "cm")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_cm_sketch(spark, state_dir)
@@ -426,40 +452,15 @@ def run_cm_increment(
         if delta.isEmpty():
             return
         merged = cm_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"cm-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _CM_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _CM_POINTER))
+        store.commit(batch_id, {"": merged})
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_HLL_POINTER = "CURRENT_HLL"
+    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
 
 
 def read_hll_registers(spark: SparkSession, state_dir: str):
     """The currently-committed HLL register table (bucket, m), or None
     before the first drain. Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _HLL_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "hll")
 
 
 def run_hll_increment(
@@ -475,12 +476,9 @@ def run_hll_increment(
     contract re-folds the same registers to the same table, so no
     batch-id replay guard is needed for correctness; the snapshot name
     still embeds the batch id so readers can see stream progress."""
-    import uuid
-
-    from joern_spark.operators.extract import extract_triples_raw
     from joern_spark.operators.sketch import hll_merge, hll_registers
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "hll")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, _ = read_hll_registers(spark, state_dir)
@@ -491,40 +489,15 @@ def run_hll_increment(
         if delta.isEmpty():
             return
         merged = hll_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"hll-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _HLL_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _HLL_POINTER))
+        store.commit(batch_id, {"": merged})
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_BLOOM_POINTER = "CURRENT_BLOOM"
+    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
 
 
 def read_bloom_bits(spark: SparkSession, state_dir: str):
     """The currently-committed Bloom bit table (bit,), or None before
     the first drain. Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _BLOOM_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "bloom")
 
 
 def run_bloom_increment(
@@ -542,12 +515,9 @@ def run_bloom_increment(
     readers can see stream progress. The committed table is ≤ BLOOM_M
     rows regardless of how many batches folded into it, so the snapshot
     write never grows with stream history."""
-    import uuid
-
-    from joern_spark.operators.extract import extract_triples_raw
     from joern_spark.operators.sketch import bloom_bits, bloom_merge
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "bloom")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, _ = read_bloom_bits(spark, state_dir)
@@ -558,40 +528,15 @@ def run_bloom_increment(
         if delta.isEmpty():
             return
         merged = bloom_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"bloom-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _BLOOM_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _BLOOM_POINTER))
+        store.commit(batch_id, {"": merged})
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_HIST_POINTER = "CURRENT_HIST"
+    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
 
 
 def read_hist_registers(spark: SparkSession, state_dir: str):
     """The currently-committed histogram table (bucket, cnt), or None
     before the first drain. Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _HIST_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "hist")
 
 
 def run_hist_increment(
@@ -609,12 +554,10 @@ def run_hist_increment(
     carries the standard batch-id guard: the committed snapshot name
     embeds the last folded batch id, and a replayed batch id ≤ that is
     skipped."""
-    import uuid
-
     from joern_spark.functions.hashing import tokens_col
     from joern_spark.operators.sketch import hist_merge, hist_registers
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "hist")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_hist_registers(spark, state_dir)
@@ -627,53 +570,16 @@ def run_hist_increment(
         if delta.isEmpty():
             return
         merged = hist_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"hist-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _HIST_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _HIST_POINTER))
+        store.commit(batch_id, {"": merged})
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-DOC_STREAM_SCHEMA = "doc_id bigint, text string, lang string, source string"
-
-
-def read_document_stream(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.format("parquet").schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(landing_dir)
-
-
-_MIX_POINTER = "CURRENT_MIX"
+    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
 
 
 def read_mix_counts(spark: SparkSession, state_dir: str):
     """The currently-committed per-source (n_docs, n_tokens) count
     table, or None before the first drain. Returns
     (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _MIX_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "mix")
 
 
 def run_mix_increment(
@@ -690,11 +596,9 @@ def run_mix_increment(
     standard batch-id guard (the committed snapshot name embeds the last
     folded batch id; a replayed batch id ≤ that is skipped) — the same
     discipline as the Count-Min and histogram folds."""
-    import uuid
-
     from joern_spark.functions.hashing import tokens_col
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "mix")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_mix_counts(spark, state_dir)
@@ -723,43 +627,18 @@ def run_mix_increment(
             )
         else:
             merged = delta
-        snap = os.path.join(
-            state_dir, f"mix-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _MIX_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _MIX_POINTER))
+        store.commit(batch_id, {"": merged})
 
-    stream = read_document_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold=fold
     )
-    q.awaitTermination()
-
-
-_DEDUP_POINTER = "CURRENT_DEDUP"
 
 
 def read_dedup_state(spark: SparkSession, state_dir: str):
     """The committed (bands, pairs) tables of the incremental MinHash
     dedup, or (None, None) before the first drain."""
-    p = os.path.join(state_dir, _DEDUP_POINTER)
-    if not os.path.exists(p):
-        return None, None
-    with open(p) as f:
-        name = f.read().strip()
-    base = os.path.join(state_dir, name)
-    return (
-        spark.read.parquet(os.path.join(base, "bands")),
-        spark.read.parquet(os.path.join(base, "pairs")),
-    )
+    snap = _store(spark, state_dir, "dedup").read()
+    return (snap.tables["bands"], snap.tables["pairs"]) if snap else (None, None)
 
 
 def run_dedup_increment(
@@ -780,10 +659,7 @@ def run_dedup_increment(
     Exactly-once note: band rows are deterministic per doc and pairs
     dedup on (a, b), so both folds are idempotent under at-least-once
     replay — no batch-id guard needed (the HLL/Bloom discipline, not
-    the Count-Min one). Snapshots are immutable `dedup-*` dirs behind
-    an atomically-replaced pointer (the canonical-map discipline)."""
-    import uuid
-
+    the Count-Min one)."""
     from joern_spark.operators.dedup import (
         JACCARD_THRESHOLD,
         N_BANDS,
@@ -793,7 +669,7 @@ def run_dedup_increment(
         shingles,
     )
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "dedup")
     rows_per_band = N_MINHASH // N_BANDS
 
     def band_table(docs: DataFrame) -> DataFrame:
@@ -856,33 +732,11 @@ def run_dedup_increment(
             if old_pairs is not None
             else new_pairs
         )
-        snap = os.path.join(
-            state_dir, f"dedup-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged_bands.write.mode("overwrite").parquet(
-            os.path.join(snap, "bands")
-        )
-        merged_pairs.write.mode("overwrite").parquet(
-            os.path.join(snap, "pairs")
-        )
-        tmp = os.path.join(
-            state_dir, _DEDUP_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _DEDUP_POINTER))
+        store.commit(batch_id, {"bands": merged_bands, "pairs": merged_pairs})
 
-    stream = read_document_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold=fold
     )
-    q.awaitTermination()
-
-
-_TINDEX_POINTER = "CURRENT_TINDEX"
 
 
 def read_text_index(spark: SparkSession, state_dir: str):
@@ -890,20 +744,8 @@ def read_text_index(spark: SparkSession, state_dir: str):
     `textstats.load_text_index` returns (usable directly by
     `bm25_topk_indexed` / `qld_topk_indexed`), or None before the
     first drain."""
-    p = os.path.join(state_dir, _TINDEX_POINTER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        name = f.read().strip()
-    base = os.path.join(state_dir, name)
-    return {
-        "tf": spark.read.parquet(os.path.join(base, "tf")),
-        "dl": spark.read.parquet(os.path.join(base, "dl")),
-        "dfreq": spark.read.parquet(os.path.join(base, "dfreq")),
-        "cf": spark.read.parquet(os.path.join(base, "cf")),
-        "stats": spark.read.parquet(os.path.join(base, "stats")),
-        "meta": {"snapshot": name},
-    }
+    snap = _store(spark, state_dir, "tindex").read()
+    return None if snap is None else {**snap.tables, "meta": {"snapshot": snap.name}}
 
 
 def run_index_increment(
@@ -921,13 +763,10 @@ def run_index_increment(
     Exactly-once: the delta anti-joins the committed dl's doc ids, so
     an at-least-once replay folds an EMPTY delta — idempotent without
     a batch-id guard (the Bloom/HLL discipline; doc ids are the
-    natural dedup key). Snapshots are immutable `tindex-*` dirs behind
-    an atomically-replaced pointer."""
-    import uuid
-
+    natural dedup key)."""
     from joern_spark.operators.textstats import _tf_table
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "tindex")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur = read_text_index(spark, state_dir)
@@ -978,44 +817,20 @@ def run_index_increment(
             ).alias("avgdl"),
             "c_tot",
         )
-        snap = os.path.join(
-            state_dir, f"tindex-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
+        store.commit(
+            batch_id,
+            {"tf": tf_m, "dl": dl_m, "dfreq": df_m, "cf": cf_m, "stats": st_m},
         )
-        tf_m.write.mode("overwrite").parquet(os.path.join(snap, "tf"))
-        dl_m.write.mode("overwrite").parquet(os.path.join(snap, "dl"))
-        df_m.write.mode("overwrite").parquet(os.path.join(snap, "dfreq"))
-        cf_m.write.mode("overwrite").parquet(os.path.join(snap, "cf"))
-        st_m.write.mode("overwrite").parquet(os.path.join(snap, "stats"))
-        tmp = os.path.join(
-            state_dir, _TINDEX_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _TINDEX_POINTER))
 
-    stream = read_document_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold=fold
     )
-    q.awaitTermination()
-
-
-_BURST_POINTER = "CURRENT_BURST"
 
 
 def read_burst_counts(spark: SparkSession, state_dir: str):
     """The committed per-(entity, hour) mention-count table, or None.
     Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _BURST_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "burst")
 
 
 def burst_hours_from_counts(counts: DataFrame) -> DataFrame:
@@ -1057,12 +872,10 @@ def run_burst_increment(
     moves, exactly like the batch operator). Sums are not idempotent →
     the Count-Min batch-id replay guard. State is vocabulary ×
     corpus-hours cells — dimension-sized forever."""
-    import uuid
-
     from joern_spark.operators.extract import extract_mentions
     from joern_spark.operators.link import keyed_mentions
 
-    os.makedirs(state_dir, exist_ok=True)
+    store = _store(spark, state_dir, "burst")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_burst_counts(spark, state_dir)
@@ -1089,22 +902,6 @@ def run_burst_increment(
             if cur is not None
             else delta
         )
-        snap = os.path.join(
-            state_dir, f"burst-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _BURST_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _BURST_POINTER))
+        store.commit(batch_id, {"": merged})
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)

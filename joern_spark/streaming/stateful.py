@@ -30,7 +30,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from joern_spark.generator import DEFAULT_DB
 from joern_spark.operators.extract import RULES_BY_NAME
-from joern_spark.streaming.ingest import read_transcript_stream
+from joern_spark.streaming.ingest import EVENT_STREAM_SCHEMA, drain, read_stream
 
 STATE_SCHEMA = "live_db string"
 REBIND_OUT_SCHEMA = "conv_id string, turn_idx int, live_db string"
@@ -72,17 +72,11 @@ def run_windowed_counts(
     tz = spark.conf.get("spark.sql.session.timeZone")
     if tz != "UTC":  # see windowed_turn_counts docstring — state is TZ-keyed
         raise ValueError(f"windowed counts require session timeZone UTC, got {tz}")
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        windowed_turn_counts(stream, window, late)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        windowed_turn_counts(read_stream(spark, landing_dir), window, late),
+        checkpoint_dir,
+        path=out_dir,
     )
-    q.awaitTermination()
 
 
 def session_stream(
@@ -133,22 +127,11 @@ def run_session_stream(
     """Drain available event files; append every session the advancing
     watermark has closed. Re-invoking after later data lands finalizes
     (and emits) the earlier sessions exactly once."""
-    from joern_spark.streaming.ingest import read_event_stream
-
     tz = spark.conf.get("spark.sql.session.timeZone")
     if tz != "UTC":  # state is TZ-keyed, see windowed_turn_counts
         raise ValueError(f"session stream requires session timeZone UTC, got {tz}")
-    stream = read_event_stream(spark, landing_dir)
-    q = (
-        session_stream(stream, gap_s, late)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    events = read_stream(spark, landing_dir, EVENT_STREAM_SCHEMA)
+    drain(session_stream(events, gap_s, late), checkpoint_dir, path=out_dir)
 
 
 def _rebind_state_fn(key, pdfs, state: GroupState):
@@ -214,17 +197,11 @@ def rebind_state_stream(stream: DataFrame) -> DataFrame:
 def run_rebind_state(
     spark: SparkSession, landing_dir: str, out_dir: str, checkpoint_dir: str
 ) -> None:
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        rebind_state_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        rebind_state_stream(read_stream(spark, landing_dir)),
+        checkpoint_dir,
+        path=out_dir,
     )
-    q.awaitTermination()
 
 
 def dedup_stream(stream: DataFrame, within: str = "7 days") -> DataFrame:
@@ -262,17 +239,7 @@ def run_dedup_stream(
     tz = spark.conf.get("spark.sql.session.timeZone")
     if tz != "UTC":  # see dedup_stream docstring — state is TZ-keyed
         raise ValueError(f"dedup stream requires session timeZone UTC, got {tz}")
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(dedup_stream(read_stream(spark, landing_dir)), checkpoint_dir, path=out_dir)
 
 
 def leak_scan_stream(stream: DataFrame) -> DataFrame:
@@ -301,19 +268,11 @@ def run_leak_scan_stream(
 ) -> None:
     """AvailableNow drain of the landing directory into an append-only
     streamed findings table (query_name, evidence, score)."""
-    from joern_spark.streaming.ingest import read_transcript_stream
-
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        leak_scan_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        leak_scan_stream(read_stream(spark, landing_dir)),
+        checkpoint_dir,
+        path=out_dir,
     )
-    q.awaitTermination()
 
 
 FAITH_STATE_SCHEMA = "locs array<string>, temps array<string>, conds array<string>"
@@ -413,14 +372,8 @@ def faithfulness_stream(stream: DataFrame) -> DataFrame:
 def run_faithfulness_stream(
     spark: SparkSession, landing_dir: str, out_dir: str, checkpoint_dir: str
 ) -> None:
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        faithfulness_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        faithfulness_stream(read_stream(spark, landing_dir)),
+        checkpoint_dir,
+        path=out_dir,
     )
-    q.awaitTermination()

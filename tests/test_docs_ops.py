@@ -1706,13 +1706,15 @@ def test_mmr_rerank_prefers_diversity(spark):
 def test_rank_agreement_hand_computed(spark):
     """Two 3-item rankings sharing 2 docs: per-doc RBO weights w(m) =
     (1−p)·Σ_{d=m..k} p^{d−1}/d recomputed by hand; jaccard uses actual
-    list sizes; a disjoint query emits no row."""
+    list sizes; disjoint lists give zero agreement, not a missing row."""
     a = spark.createDataFrame(
-        [("q0", 1, 1), ("q0", 2, 2), ("q0", 3, 3), ("q1", 9, 1)],
+        [("q0", 1, 1), ("q0", 2, 2), ("q0", 3, 3), ("q1", 9, 1),
+         ("q2", 5, 1), ("q2", 6, 2)],
         "query_id string, doc_id long, rank int",
     )
     b = spark.createDataFrame(
-        [("q0", 2, 1), ("q0", 1, 2), ("q0", 4, 3), ("q1", 8, 1)],
+        [("q0", 2, 1), ("q0", 1, 2), ("q0", 4, 3), ("q1", 8, 1),
+         ("q2", 7, 1), ("q2", 8, 2), ("q2", 9, 3)],
         "query_id string, doc_id long, rank int",
     )
     out = {
@@ -1730,7 +1732,9 @@ def test_rank_agreement_hand_computed(spark):
     assert n_common == 2
     assert jacc == 2 / (3 + 3 - 2)
     assert abs(rbo - expected_rbo) < 1e-15
-    assert "q1" not in out  # disjoint lists → no row (both engines)
+    # disjoint lists → zero agreement (both engines)
+    assert out["q1"] == (0, 0.0, 0.0)
+    assert out["q2"] == (0, 0.0, 0.0)
 
 
 def test_novelty_stats(spark):

@@ -266,7 +266,7 @@ def test_rfm_segments_terciles(spark):
     to 'low' for everyone; segments partition the user base."""
     import datetime as dt
 
-    from joern_spark.operators.events import rfm_segments
+    from joern_spark.operators.events import rfm_segments, rfm_user_scores
 
     t0 = dt.datetime(2026, 5, 1, 12, 0, 0)
     rows = [
@@ -287,6 +287,10 @@ def test_rfm_segments_terciles(spark):
         ("low", "low", "high"): 2,
     }
     assert sum(got.values()) == 6
+
+    # cents round: 0.29 * 100 is 28.999999999999996, 29 cents not 28
+    one = spark.createDataFrame([(7, t0, 7, "click", 0.29, None)], e.schema)
+    assert [r.m for r in rfm_user_scores(one).collect()] == [29]
 
 
 def test_session_funnel_census(spark):

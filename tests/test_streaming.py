@@ -906,3 +906,79 @@ def test_burst_increment_equals_batch_bursts(spark, tmp_path_factory):
         for r in entity_bursts(corpus, extract_mentions(corpus)).collect()
     }
     assert stream_bursts == batch_bursts and batch_bursts
+
+
+# --- the snapshot store, without a streaming query ---------------------------
+
+
+def _two_tables(spark, n):
+    return {"a": spark.range(n), "b": spark.range(10 * n)}
+
+
+def _store(spark, state):
+    return ingest.SnapshotStore(spark, str(state), "t", "CURRENT_T", ("a", "b"))
+
+
+def test_store_read_before_first_commit(spark, tmp_path):
+    """No pointer yet: nothing to read, at any batch id."""
+    store = _store(spark, tmp_path / "state")
+    assert store.read() is None
+    assert store.as_of(10**6) is None
+    assert store.committed() == []
+
+
+def test_store_uncommitted_snapshot_is_not_read(spark, tmp_path):
+    """A fully written walk snapshot whose pointer was never replaced (a
+    crash between the table writes and the commit) is invisible: the
+    pointer is the only commit point."""
+    state = tmp_path / "state"
+    snap = state / "walk-000000-0badf00d"
+    for t in ("paths", "edges", "seeds"):
+        spark.range(3).write.parquet(str(snap / t))
+    assert not (state / "CURRENT_WALK").exists()
+    assert ingest.read_walk(spark, str(state)) is None
+
+
+def test_store_torn_snapshot_invisible_and_swept(spark, tmp_path):
+    """A snapshot with one table missing `_SUCCESS` is not listed, not
+    served by `as_of`, and the next commit deletes it."""
+    import os
+
+    state = tmp_path / "state"
+    store = _store(spark, state)
+    store.commit(0, _two_tables(spark, 1))
+    torn = state / "t-000005-deadbeef"
+    for t, df in _two_tables(spark, 2).items():
+        df.write.parquet(str(torn / t))
+    os.remove(torn / "b" / "_SUCCESS")
+
+    assert torn.name not in store.committed()
+    assert store.as_of(5).batch_id == 0
+    store.commit(1, _two_tables(spark, 3))
+    assert not torn.exists()
+    assert len(store.committed()) == 2
+
+
+def test_store_retention_keeps_newest_three(spark, tmp_path):
+    """Five commits leave exactly KEEP_SNAPSHOTS written snapshots; the
+    pointer's snapshot reads back the last commit's tables."""
+    store = _store(spark, tmp_path / "state")
+    for i in range(5):
+        store.commit(i, _two_tables(spark, i + 1))
+    assert ingest.KEEP_SNAPSHOTS == 3
+    kept = store.committed()
+    assert [int(n.split("-")[1]) for n in kept] == [2, 3, 4]
+    snap = store.read()
+    assert snap.name == kept[-1] and snap.batch_id == 4
+    assert snap.tables["a"].count() == 5 and snap.tables["b"].count() == 50
+
+
+def test_store_as_of_among_retained(spark, tmp_path):
+    """`as_of` serves the last retained snapshot with batch id ≤ its
+    argument; batches older than the retained window are gone."""
+    store = _store(spark, tmp_path / "state")
+    for i in (0, 2, 4, 6, 8):
+        store.commit(i, _two_tables(spark, i + 1))
+    assert [store.as_of(b).batch_id for b in (4, 5, 7, 8, 99)] == [4, 4, 6, 8, 8]
+    assert store.as_of(5).tables["a"].count() == 5
+    assert store.as_of(3) is None

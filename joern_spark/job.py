@@ -2,24 +2,13 @@
 point (the joern-parse lifecycle, JoernParse.scala:81-92, as a
 distributed, checkpointed DAG).
 
-Stage DAG of `run_job` (each stage gated by the per-bucket manifest,
-plans/manifest.py). `manifest.run_dag` starts a stage as soon as every
-stage it reads is committed, so stages run concurrently on threads.
-
-  ingest (bucketed transcripts, cached)
-    │   these five read only the transcripts and start at once:
-    ├─ s1_turns          conv-local, per-bucket
-    ├─ s1_next_turn      conv-local, per-bucket
-    ├─ s2_mentions       conv-local, per-bucket
-    ├─ s2_triples_raw    conv-local, per-bucket
-    └─ s4_canonical_map  global (connected components)
-
-  then, each while the other first-wave stages may still run:
-    s3_linked         ← s2_mentions
-                        conv-local (committed mentions ⋈ broadcast
-                        entities), per-bucket
-    s5_triples_final  ← s2_triples_raw + s4_canonical_map
-                        global (canonical rewrite + dedup)
+`run_job` runs the S1–S5 stage table `pipeline.STAGES` through the
+per-bucket manifest (plans/manifest.py): conversation-local stages
+compute only their pending buckets, global stages recompute when the
+combined input fingerprint changes. `manifest.run_dag` starts a stage
+as soon as every stage it reads is committed, so stages run
+concurrently on threads. The curation, index and retrieval jobs run
+their stages in sequence on the same StageRunner.
 
 Usage:
   spark-submit --py-files joern_spark.zip -m joern_spark.job \
@@ -37,16 +26,51 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from joern_spark import generator as G
-from joern_spark.operators import assemble, canonicalize, link, materialize, rebind
-from joern_spark.operators.extract import extract_mentions, extract_triples_raw
+from joern_spark.pipeline import STAGES, Stage
 from joern_spark.plans.manifest import (
     BUCKET_COL,
+    BucketedInput,
     StageRunner,
-    input_fingerprint,
+    bucketed_input,
+    in_buckets,
     run_dag,
     with_bucket,
 )
 from joern_spark.sources.transcripts import read_entities, read_transcripts
+
+# the tables run_job keeps bucketed: the transcripts and every local stage
+_BUCKETED = {"transcripts"} | {st.name for st in STAGES if st.local}
+
+
+def _stage_task(job: BucketedInput, stage: Stage):
+    """What `run_dag` runs for `stage` once its inputs are ready. A
+    local stage reads its bucketed inputs cut to the pending buckets and
+    re-derives the bucket from its output's conv_id (same hash → same
+    bucket, so it stays aligned with the input partitioning); a global
+    stage reads them whole. `entities` and global stage outputs are
+    passed as they are."""
+
+    def task(*inputs):
+        def call(pending=None):
+            args = []
+            for name, df in zip(stage.inputs, inputs):
+                if name in _BUCKETED:
+                    df = df.drop(BUCKET_COL) if pending is None else in_buckets(df, pending)
+                args.append(df)
+            return stage.fn(*args)
+
+        if not stage.local:
+            return job.runner.run_global_stage(stage.name, call, job.global_fp)
+
+        def compute(pending):
+            out = call(pending)
+            if stage.conv_id_from is not None:
+                out = out.withColumn("conv_id", F.split(F.col(stage.conv_id_from), ":")[0])
+            return with_bucket(out, job.n_buckets)
+
+        return job.runner.run_stage(stage.name, compute, job.fps)
+
+    return task
 
 
 def run_job(
@@ -57,102 +81,17 @@ def run_job(
     fail_after_buckets: int | None = None,
     runner: StageRunner | None = None,
 ) -> dict[str, DataFrame]:
-    runner = runner or StageRunner(
-        spark, out_root, n_buckets, fail_after_buckets=fail_after_buckets
-    )
-    n_buckets = runner.n_buckets
-    t = with_bucket(read_transcripts(spark, sf), n_buckets).repartition(
-        n_buckets, F.col(BUCKET_COL)
-    )
-    t.cache()
-    fps = input_fingerprint(t, ["conv_id", "turn_idx", "text"])
-    entities = read_entities(spark)
-
-    def bucketed(fn, conv_id_from: str | None = None):
-        """Conv-local stage: run `fn` on pending buckets only, re-derive the
-        bucket from the output's conv_id (same hash → same bucket, so the
-        stage stays aligned with the input partitioning)."""
-
-        def compute(pending):
-            sub = t.where(F.col(BUCKET_COL).isin(pending)).drop(BUCKET_COL)
-            out = fn(sub)
-            if conv_id_from is not None:
-                out = out.withColumn(
-                    "conv_id", F.split(F.col(conv_id_from), ":")[0]
-                )
-            return with_bucket(out, n_buckets)
-
-        return compute
-
-    def link_committed(mentions):
-        """s3 links the committed s2 rows of its pending buckets — the
-        mentions are extracted once, by s2."""
-
-        def compute(pending):
-            sub = mentions.where(F.col(BUCKET_COL).isin(pending)).drop(BUCKET_COL)
-            return with_bucket(link.link_mentions(sub, entities), n_buckets)
-
-        return compute
-
-    # global stages: fingerprint = combined fingerprint of every input bucket
-    global_fp = "|".join(f"{b}:{fps[b]}" for b in sorted(fps))
-
-    def compute_cmap():
-        return canonicalize.connected_components(
-            canonicalize.same_as_pairs(t.drop(BUCKET_COL))
-        )
-
-    def compute_final(triples_raw, cmap):
-        raw = triples_raw.drop(BUCKET_COL)
-        dyn = rebind.dbcur_triples(t.drop(BUCKET_COL))
-        static = canonicalize.canonicalize_triples(raw, cmap)
-        dyn_c = canonicalize.canonicalize_triples(dyn, cmap)
-        return materialize.dedup_triples(static.unionByName(dyn_c))
-
-    run, run_global = runner.run_stage, runner.run_global_stage
-    stages = {  # name: (stages it reads, what runs once they are committed)
-        "s1_turns": ((), lambda: run("s1_turns", bucketed(assemble.turn_nodes), fps)),
-        "s1_next_turn": (
-            (),
-            lambda: run(
-                "s1_next_turn",
-                bucketed(assemble.next_turn_edges, conv_id_from="src"),
-                fps,
-            ),
-        ),
-        "s2_mentions": ((), lambda: run("s2_mentions", bucketed(extract_mentions), fps)),
-        "s2_triples_raw": (
-            (),
-            lambda: run("s2_triples_raw", bucketed(extract_triples_raw), fps),
-        ),
-        "s3_linked": (
-            ("s2_mentions",),
-            lambda mentions: run("s3_linked", link_committed(mentions), fps),
-        ),
-        "s4_canonical_map": (
-            (),
-            lambda: run_global("s4_canonical_map", compute_cmap, global_fp),
-        ),
-        "s5_triples_final": (
-            ("s2_triples_raw", "s4_canonical_map"),
-            lambda raw, cmap: run_global(
-                "s5_triples_final", lambda: compute_final(raw, cmap), global_fp
-            ),
-        ),
-    }
-    try:
-        out = run_dag(spark, stages)
-    finally:
-        t.unpersist()
-    return {
-        "turns": out["s1_turns"],
-        "next_turn": out["s1_next_turn"],
-        "mentions": out["s2_mentions"],
-        "triples_raw": out["s2_triples_raw"],
-        "linked": out["s3_linked"],
-        "canonical_map": out["s4_canonical_map"],
-        "triples_final": out["s5_triples_final"],
-    }
+    with bucketed_input(
+        spark, out_root, n_buckets, fail_after_buckets, runner,
+        read_transcripts(spark, sf), ["conv_id", "turn_idx", "text"],
+    ) as job:
+        entities = read_entities(spark)
+        out = run_dag(spark, {
+            "transcripts": ((), lambda: job.df),
+            "entities": ((), lambda: entities),
+            **{st.name: (st.inputs, _stage_task(job, st)) for st in STAGES},
+        })
+    return {st.layer: out[st.name] for st in STAGES}
 
 
 def run_retrieval_job(
@@ -181,44 +120,29 @@ def run_retrieval_job(
     from joern_spark.operators.textstats import _tf_table
     from joern_spark.sources.testdata import read_documents
 
-    runner = runner or StageRunner(
-        spark, out_root, n_buckets, fail_after_buckets=fail_after_buckets
-    )
-    n_buckets = runner.n_buckets
-    d = with_bucket(read_documents(spark, sf_dir), n_buckets, key="doc_id").repartition(
-        n_buckets, F.col(BUCKET_COL)
-    )
-    d.cache()
-    fps = input_fingerprint(d, ["doc_id", "text"])
-    global_fp = "|".join(f"{b}:{fp}" for b, fp in sorted(fps.items()))
+    with bucketed_input(
+        spark, out_root, n_buckets, fail_after_buckets, runner,
+        read_documents(spark, sf_dir), ["doc_id", "text"], key="doc_id",
+    ) as job:
 
-    def compute_tf(pending):
-        sub = d.where(F.col(BUCKET_COL).isin(pending)).drop(BUCKET_COL)
-        return with_bucket(
-            _tf_table(sub.select("doc_id", "text")), n_buckets, key="doc_id"
+        def compute_tf(pending):
+            sub = in_buckets(job.df, pending).select("doc_id", "text")
+            return with_bucket(_tf_table(sub), job.n_buckets, key="doc_id")
+
+        tf = job.runner.run_stage("t1_tf", compute_tf, job.fps)
+
+        def compute_dl(pending):
+            sub = tf.where(F.col(BUCKET_COL).isin(pending))
+            return sub.groupBy(BUCKET_COL, "doc_id").agg(F.sum("tf").alias("dl"))
+
+        dl = job.runner.run_stage("t2_dl", compute_dl, job.fps)
+        vocab = job.runner.run_global_stage(
+            "t3_vocab",
+            lambda: tf.drop(BUCKET_COL)
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")),
+            job.global_fp,
         )
-
-    tf = runner.run_stage("t1_tf", compute_tf, fps)
-
-    def compute_dl(pending):
-        sub = tf.where(F.col(BUCKET_COL).isin(pending))
-        return sub.groupBy(BUCKET_COL, "doc_id").agg(
-            F.sum("tf").alias("dl")
-        )
-
-    dl = runner.run_stage("t2_dl", compute_dl, fps)
-
-    def compute_vocab():
-        t = tf.drop(BUCKET_COL)
-        return (
-            t.groupBy("tok")
-            .agg(
-                F.count(F.lit(1)).alias("df"),
-                F.sum("tf").alias("cf"),
-            )
-        )
-
-    vocab = runner.run_global_stage("t3_vocab", compute_vocab, global_fp)
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (
@@ -226,7 +150,6 @@ def run_retrieval_job(
         ).alias("avgdl"),
         F.sum("dl").cast("long").alias("c_tot"),
     )
-    d.unpersist()
     return {
         "tf": tf.drop(BUCKET_COL),
         "dl": dl.drop(BUCKET_COL),
@@ -315,54 +238,46 @@ def run_curation_job(
     from joern_spark.operators.dedup import exact_dedup, shingles
     from joern_spark.sources.testdata import read_documents
 
-    runner = runner or StageRunner(
-        spark, out_root, n_buckets, fail_after_buckets=fail_after_buckets
-    )
-    n_buckets = runner.n_buckets
-    d = with_bucket(read_documents(spark, sf_dir), n_buckets, key="doc_id").repartition(
-        n_buckets, F.col(BUCKET_COL)
-    )
-    d.cache()
     # lang participates in the verdict (the sample rate is keyed on it),
     # so it MUST be in the fingerprint or a lang-only correction would
     # resume to stale verdicts.
-    fps = input_fingerprint(d, ["doc_id", "text", "lang"])
-    global_fp = "|".join(f"{b}:{fps[b]}" for b in sorted(fps))
-    docs = d.drop(BUCKET_COL)
-
-    bench_sh = runner.run_global_stage(
-        "c1_benchmark_shingles",
-        lambda: shingles(curate.benchmark_slice(docs)).select("shingle").distinct(),
-        global_fp,
-    )
-    groups = runner.run_global_stage(
-        "c2_dup_groups",
-        lambda: exact_dedup(docs).select("text_hash", "keep_id"),
-        global_fp,
-    )
-
-    def compute_verdict(pending):
-        sub = d.where(F.col(BUCKET_COL).isin(pending)).drop(BUCKET_COL)
-        hits = (
-            shingles(sub)
-            .join(F.broadcast(bench_sh), "shingle")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_contaminated"))
+    with bucketed_input(
+        spark, out_root, n_buckets, fail_after_buckets, runner,
+        read_documents(spark, sf_dir), ["doc_id", "text", "lang"], key="doc_id",
+    ) as job:
+        docs = job.df.drop(BUCKET_COL)
+        bench_sh = job.runner.run_global_stage(
+            "c1_benchmark_shingles",
+            lambda: shingles(curate.benchmark_slice(docs)).select("shingle").distinct(),
+            job.global_fp,
         )
-        keyed = curate.keyed_docs(sub, curate.DEFAULT_SAMPLE_RATES)
-        reason = curate.verdict_reason(
-            F.coalesce("n_contaminated", F.lit(0)) > 0
+        groups = job.runner.run_global_stage(
+            "c2_dup_groups",
+            lambda: exact_dedup(docs).select("text_hash", "keep_id"),
+            job.global_fp,
         )
-        out = (
-            keyed.join(F.broadcast(groups), "text_hash")
-            .join(hits, "doc_id", "left")
-            .select("doc_id", reason.alias("reason"))
-            .withColumn("kept", F.col("reason") == "kept")
-        )
-        return with_bucket(out, n_buckets, key="doc_id")
 
-    verdict = runner.run_stage("c3_verdict", compute_verdict, fps)
-    d.unpersist()
+        def compute_verdict(pending):
+            sub = in_buckets(job.df, pending)
+            hits = (
+                shingles(sub)
+                .join(F.broadcast(bench_sh), "shingle")
+                .groupBy("doc_id")
+                .agg(F.count(F.lit(1)).alias("n_contaminated"))
+            )
+            keyed = curate.keyed_docs(sub, curate.DEFAULT_SAMPLE_RATES)
+            reason = curate.verdict_reason(
+                F.coalesce("n_contaminated", F.lit(0)) > 0
+            )
+            out = (
+                keyed.join(F.broadcast(groups), "text_hash")
+                .join(hits, "doc_id", "left")
+                .select("doc_id", reason.alias("reason"))
+                .withColumn("kept", F.col("reason") == "kept")
+            )
+            return with_bucket(out, job.n_buckets, key="doc_id")
+
+        verdict = job.runner.run_stage("c3_verdict", compute_verdict, job.fps)
     return {"verdict": verdict}
 
 
@@ -391,51 +306,47 @@ def run_index_job(
     from joern_spark.operators import similarity
     from joern_spark.sources.testdata import read_embeddings
 
-    runner = runner or StageRunner(
-        spark, out_root, n_buckets, fail_after_buckets=fail_after_buckets
-    )
-    n_buckets = runner.n_buckets
-    e = with_bucket(
-        read_embeddings(spark, sf_dir), n_buckets, key="vec_id"
-    ).repartition(n_buckets, F.col(BUCKET_COL))
-    e.cache()
-    fps = input_fingerprint(e, ["vec_id", "embedding"])
-    global_fp = "|".join(f"{b}:{fps[b]}" for b in sorted(fps))
-    embs = e.drop(BUCKET_COL)
+    with bucketed_input(
+        spark, out_root, n_buckets, fail_after_buckets, runner,
+        read_embeddings(spark, sf_dir), ["vec_id", "embedding"], key="vec_id",
+    ) as job:
+        runner, global_fp = job.runner, job.global_fp
+        embs = job.df.drop(BUCKET_COL)
 
-    cents_df = runner.run_global_stage(
-        "i1_centroids", lambda: similarity.ivf_centroids(embs), global_fp
-    )
-    cents = [list(r.centroid) for r in cents_df.orderBy("cell").collect()]
-
-    def compute_assign(pending):
-        sub = e.where(F.col(BUCKET_COL).isin(pending)).drop(BUCKET_COL)
-        out = similarity.cell_assignments(sub, cents).select("vec_id", "cell")
-        return with_bucket(out, n_buckets, key="vec_id")
-
-    # assignments depend on the CENTROID SET, not only the bucket's own
-    # rows: fold the global fingerprint in, so a partial-input change
-    # (which can move the md5-ranked centroid choice) re-assigns EVERY
-    # bucket instead of mixing two centroid sets across buckets
-    fps_assign = {b: f"{fp}|{global_fp}" for b, fp in fps.items()}
-    assign = runner.run_stage("i2_assign", compute_assign, fps_assign)
-
-    def compute_quant(pending):
-        sub = e.where(F.col(BUCKET_COL).isin(pending)).drop(BUCKET_COL)
-        return with_bucket(
-            similarity.quantize_int8(sub), n_buckets, key="vec_id"
+        cents_df = runner.run_global_stage(
+            "i1_centroids", lambda: similarity.ivf_centroids(embs), global_fp
         )
+        cents = [list(r.centroid) for r in cents_df.orderBy("cell").collect()]
 
-    quant = runner.run_stage("i3_quantized", compute_quant, fps)
+        def compute_assign(pending):
+            out = similarity.cell_assignments(in_buckets(job.df, pending), cents)
+            return with_bucket(
+                out.select("vec_id", "cell"), job.n_buckets, key="vec_id"
+            )
 
-    # pass the COMMITTED centroids: the keep map provably shares i2's
-    # centroid set and skips a second full-scan centroid derivation
-    keepmap = runner.run_global_stage(
-        "i4_keepmap",
-        lambda: similarity.semantic_dedup(embs, centroids=cents),
-        global_fp,
-    )
-    e.unpersist()
+        # assignments depend on the CENTROID SET, not only the bucket's own
+        # rows: fold the global fingerprint in, so a partial-input change
+        # (which can move the md5-ranked centroid choice) re-assigns EVERY
+        # bucket instead of mixing two centroid sets across buckets
+        fps_assign = {b: f"{fp}|{global_fp}" for b, fp in job.fps.items()}
+        assign = runner.run_stage("i2_assign", compute_assign, fps_assign)
+
+        def compute_quant(pending):
+            return with_bucket(
+                similarity.quantize_int8(in_buckets(job.df, pending)),
+                job.n_buckets,
+                key="vec_id",
+            )
+
+        quant = runner.run_stage("i3_quantized", compute_quant, job.fps)
+
+        # pass the COMMITTED centroids: the keep map provably shares i2's
+        # centroid set and skips a second full-scan centroid derivation
+        keepmap = runner.run_global_stage(
+            "i4_keepmap",
+            lambda: similarity.semantic_dedup(embs, centroids=cents),
+            global_fp,
+        )
     return {
         "centroids": cents_df,
         "assign": assign,

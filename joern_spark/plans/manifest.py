@@ -32,7 +32,11 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Iterator
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from contextlib import contextmanager
+from dataclasses import dataclass
+from pathlib import Path
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +72,22 @@ def input_fingerprint(df: DataFrame, cols: list[str]) -> dict[int, str]:
         .collect()
     )
     return {r[BUCKET_COL]: f"{r['n']}:{r['s']}" for r in rows}
+
+
+def write_atomic(path: str | Path, text: str) -> None:
+    """Write `text` to `path` through a temp file and `os.replace`, so
+    `path` always holds the old text or the new, never part of one."""
+    tmp = Path(f"{path}.tmp{uuid.uuid4().hex[:8]}")
+    try:
+        tmp.write_text(text)
+        os.replace(tmp, path)
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
+def in_buckets(df: DataFrame, buckets: list[int]) -> DataFrame:
+    """The rows of `df` in `buckets`, without BUCKET_COL."""
+    return df.where(F.col(BUCKET_COL).isin(buckets)).drop(BUCKET_COL)
 
 
 def footer_rows(directory: str) -> int:
@@ -142,11 +162,7 @@ class Manifest:
             return json.load(f)
 
     def commit(self, stage: str, bucket: int, row: dict) -> None:
-        p = self._path(stage, bucket)
-        tmp = p + f".tmp{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(row, f)
-        os.replace(tmp, p)
+        write_atomic(self._path(stage, bucket), json.dumps(row))
 
     def completed(self, stage: str) -> dict[int, dict]:
         out = {}
@@ -193,11 +209,7 @@ class StageRunner:
         """Persist the stage schema so empty stages (zero rows in every
         bucket) still read back typed instead of failing schema
         inference."""
-        p = self._schema_path(stage)
-        tmp = p + f".tmp{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(schema.json())
-        os.replace(tmp, p)
+        write_atomic(self._schema_path(stage), schema.json())
 
     def read_stage(self, stage: str) -> DataFrame:
         from pyspark.sql import types as T
@@ -307,3 +319,51 @@ class StageRunner:
                 },
             )
         return self.read_stage(stage)
+
+
+@dataclass
+class BucketedInput:
+    """A job's input as its stages read it: bucketed, repartitioned by
+    bucket and cached (`df`), with per-bucket fingerprints (`fps`) and
+    the runner that gates its stages."""
+
+    runner: StageRunner
+    df: DataFrame
+    fps: dict[int, str]
+
+    @property
+    def n_buckets(self) -> int:
+        return self.runner.n_buckets
+
+    @property
+    def global_fp(self) -> str:
+        """A global stage's fingerprint: every input bucket's, combined."""
+        return "|".join(f"{b}:{self.fps[b]}" for b in sorted(self.fps))
+
+
+@contextmanager
+def bucketed_input(
+    spark: SparkSession,
+    out_root: str,
+    n_buckets: int,
+    fail_after_buckets: int | None,
+    runner: StageRunner | None,
+    df: DataFrame,
+    fingerprint_cols: list[str],
+    key: str = "conv_id",
+) -> Iterator[BucketedInput]:
+    """The preamble every StageRunner job shares: `runner` (or a fresh
+    one over `out_root`), `df` bucketed on `key` and cached, and its
+    fingerprints over `fingerprint_cols`. The cache is dropped when the
+    block exits, also when a stage fails."""
+    runner = runner or StageRunner(
+        spark, out_root, n_buckets, fail_after_buckets=fail_after_buckets
+    )
+    d = with_bucket(df, runner.n_buckets, key=key).repartition(
+        runner.n_buckets, F.col(BUCKET_COL)
+    )
+    d.cache()
+    try:
+        yield BucketedInput(runner, d, input_fingerprint(d, fingerprint_cols))
+    finally:
+        d.unpersist()

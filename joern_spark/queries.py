@@ -10,8 +10,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from joern_spark import generator as G
+from joern_spark import pipeline
 from joern_spark.functions.graph import k_hop
-from joern_spark.operators import assemble, canonicalize, link, materialize, rebind
+from joern_spark.operators import assemble, link, materialize, rebind
 from joern_spark.operators.extract import (
     RULES_BY_NAME,
     extract_mentions,
@@ -74,8 +75,7 @@ def q_stub_entities(spark, sf_dir):
 
 
 def q_canonical_map(spark, sf_dir):
-    pairs = canonicalize.same_as_pairs(_t(spark, sf_dir))
-    return canonicalize.connected_components(pairs)
+    return pipeline.canonical_map(_t(spark, sf_dir))
 
 
 def q_rebind_current_db(spark, sf_dir):
@@ -359,11 +359,7 @@ def q_triples_final(spark, sf_dir):
     costs far more than the selective re-scan and halved 8-core
     throughput at sf3."""
     t = _t(spark, sf_dir)
-    cmap = canonicalize.connected_components(canonicalize.same_as_pairs(t))
-    raw = extract_triples_raw(t)
-    static = canonicalize.canonicalize_triples(raw, cmap)
-    dyn = canonicalize.canonicalize_triples(rebind.dbcur_triples(t), cmap)
-    return materialize.dedup_triples(static.unionByName(dyn))
+    return pipeline.triples_final(t, extract_triples_raw(t), pipeline.canonical_map(t))
 
 
 def q_triples_semantics(spark, sf_dir):
@@ -381,7 +377,7 @@ def q_triples_semantics(spark, sf_dir):
     )
 
     t = _t(spark, sf_dir)
-    cmap = canonicalize.connected_components(canonicalize.same_as_pairs(t))
+    cmap = pipeline.canonical_map(t)
     raw = extract_triples_raw(t)
     dyn = rebind.dbcur_triples(t)
     sem = semantics_df(spark, current_semantics())
@@ -749,7 +745,7 @@ def q_kind_recovery(spark, sf_dir):
     from joern_spark.operators.recover import recover_kinds
 
     t = _t(spark, sf_dir)
-    cmap = canonicalize.connected_components(canonicalize.same_as_pairs(t))
+    cmap = pipeline.canonical_map(t)
     return recover_kinds(_mentions(spark, sf_dir), cmap)
 
 
@@ -820,18 +816,10 @@ def hetero_edges_from(transcripts, linked):
     derives from a conv-keyed window; a conversation split across inputs
     would lose its boundary edge — the same contract as the batch
     extractor)."""
-    pairs = canonicalize.same_as_pairs(transcripts)
     return (
         assemble.next_turn_edges(transcripts)
         .unionByName(link.links_to_edges(linked))
-        .unionByName(
-            pairs.select(
-                F.col("a").alias("src"),
-                F.col("b").alias("dst"),
-                F.lit("SAME_AS").alias("label"),
-                F.lit(None).cast("string").alias("property"),
-            )
-        )
+        .unionByName(pipeline.alias_edges(transcripts))
     )
 
 
@@ -1163,7 +1151,7 @@ def q_linked_multi(spark, sf_dir):
     """CHA-style multi-candidate entity resolution: one mention row per
     alias-component candidate, internal-preferred."""
     t = _t(spark, sf_dir)
-    cmap = canonicalize.connected_components(canonicalize.same_as_pairs(t))
+    cmap = pipeline.canonical_map(t)
     return link.link_mentions_cha(_mentions(spark, sf_dir), read_entities(spark), cmap)
 
 
@@ -1216,22 +1204,7 @@ def q_edge_stats(spark, sf_dir):
     — the full build_graph used to run the EAGER canonical-map solve whose
     output the edge table never references; counting 4 edge layers now
     costs 4 pruned scans and one aggregation."""
-    from joern_spark import schemas as S
-
-    t = _t(spark, sf_dir)
-    linked = _linked(spark, sf_dir)
-    same_as = canonicalize.same_as_pairs(t).select(
-        F.col("a").alias("src"),
-        F.col("b").alias("dst"),
-        F.lit(S.SAME_AS).alias("label"),
-        F.lit(None).cast("string").alias("property"),
-    )
-    edges = (
-        assemble.next_turn_edges(t)
-        .unionByName(assemble.contains_edges(t))
-        .unionByName(link.links_to_edges(linked))
-        .unionByName(same_as)
-    )
+    edges = pipeline.graph_edges(_t(spark, sf_dir), _linked(spark, sf_dir))
     return edges.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
 
 

@@ -17,6 +17,10 @@ Endpoints (JSON in/out):
   POST /heavy_hitters {"k"?, "limit"?}
                             — Count-Min hub-entity estimates over the
                               active project's triples
+  POST /quantiles {"qs"?, "limit"?}
+                            — histogram-sketch turn-length quantiles
+                              per role over the active project
+                              (qs defaults to [0.5, 0.9, 0.99])
   POST /boilerplate {"n"?, "min_df"?, "k"?, "limit"?}
                             — repeated turn-text n-gram spans across
                               the active project (template detection)

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from joern_spark.console import VIEWS, register_views
 from joern_spark.pipeline import GraphResult, run_pipeline
+from joern_spark.plans.manifest import write_atomic
 
 ACTIVE_PREFIX = "tpg_"
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -120,8 +121,8 @@ class Workspace:
         self.path = Path(path) if path is not None else None
         self._projects: dict[str, Project] = {}
         self._active: str | None = None
-        if self.path is not None and self.path.exists():
-            for name, sf_dir in json.loads(self.path.read_text()).items():
+        if self.path is not None:
+            for name, sf_dir in self._read_manifest().items():
                 if name.startswith("_"):  # manifest metadata (_flow_cache)
                     continue
                 self._projects[name] = Project(name, sf_dir)
@@ -277,12 +278,9 @@ class Workspace:
         )
         if cache_dir is not None:
             walk.write.mode("overwrite").parquet(str(cache_dir))
-            manifest = (
-                json.loads(self.path.read_text()) if self.path.exists() else {}
-            )
-            caches = manifest.setdefault("_flow_cache", {})
-            caches[key] = str(cache_dir)
-            self.path.write_text(json.dumps(manifest, indent=1))
+            manifest = self._read_manifest()
+            manifest.setdefault("_flow_cache", {})[key] = str(cache_dir)
+            self._write_manifest(manifest)
             return self.spark.read.parquet(str(cache_dir)), False
         return walk, False
 
@@ -352,12 +350,15 @@ class Workspace:
 
     def _save(self) -> None:
         if self.path is not None:
-            meta = {}
-            if self.path.exists():
-                meta = {
-                    k: v
-                    for k, v in json.loads(self.path.read_text()).items()
-                    if k.startswith("_")
-                }
+            meta = {
+                k: v for k, v in self._read_manifest().items() if k.startswith("_")
+            }
             meta.update({p.name: p.sf_dir for p in self.projects})
-            self.path.write_text(json.dumps(meta, indent=1))
+            self._write_manifest(meta)
+
+    def _read_manifest(self) -> dict:
+        return json.loads(self.path.read_text()) if self.path.exists() else {}
+
+    def _write_manifest(self, manifest: dict) -> None:
+        # atomic: a write that dies part-way leaves the previous manifest
+        write_atomic(self.path, json.dumps(manifest, indent=1))

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from joern_spark.job import run_job
-from joern_spark.pipeline import run_pipeline
+from joern_spark.pipeline import STAGES, build_graph, run_pipeline
 from joern_spark.plans.manifest import (
     BUCKET_COL,
     Manifest,
@@ -21,6 +21,7 @@ from joern_spark.plans.manifest import (
     StageRunner,
     footer_rows,
 )
+from joern_spark.sources.transcripts import read_entities, read_transcripts
 
 SF = 0.001
 BUCKETS = 8
@@ -31,6 +32,11 @@ BUCKETED_STAGES = (
 
 def _assert_df_equal(a, b):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def _persisted(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def _tree(root: str) -> dict[str, tuple[int, int]]:
@@ -107,6 +113,28 @@ def test_linked_from_committed_mentions_matches_fresh_link(
         extract_mentions(read_transcripts(spark, SF)), entities
     )
     _assert_df_equal(linked.select(*expected.columns), expected)
+
+
+@pytest.fixture(scope="module")
+def job_and_graph(spark, tmp_path_factory):
+    """One run_job and one build_graph over the same corpus."""
+    out = str(tmp_path_factory.mktemp("stage_table_out"))
+    committed = run_job(spark, SF, out, BUCKETS)
+    return committed, build_graph(read_transcripts(spark, SF), read_entities(spark))
+
+
+@pytest.mark.parametrize("stage", STAGES, ids=lambda st: st.name)
+def test_committed_stage_equals_build_graph_layer(job_and_graph, stage):
+    """Both executors of the stage table agree: each stage run_job
+    commits equals build_graph's layer row for row (ignoring the bucket
+    column and a conv_id the bucketing derives)."""
+    committed, graph = job_and_graph
+    got = committed[stage.layer].drop(BUCKET_COL)
+    if stage.conv_id_from is not None:
+        got = got.drop("conv_id")
+    expected = getattr(graph, stage.layer)
+    assert sorted(got.columns) == sorted(expected.columns)
+    _assert_df_equal(got.select(*expected.columns), expected)
 
 
 def _bucket_counts(runner, stage):
@@ -285,8 +313,10 @@ def test_curation_job_kill_and_resume(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("curate_out"))
 
     killed = StageRunner(spark, out, BUCKETS, fail_after_buckets=2)
+    persisted = _persisted(spark)
     with pytest.raises(SimulatedKill):
         run_curation_job(spark, sf_dir, out, BUCKETS, runner=killed)
+    assert _persisted(spark) <= persisted  # the cached input is dropped
     m = Manifest(f"{out}/_manifest")
     done1 = m.completed("c3_verdict")
     assert len(done1) == 2
@@ -315,8 +345,10 @@ def test_index_job_kill_and_resume(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index_out"))
 
     killed = StageRunner(spark, out, BUCKETS, fail_after_buckets=2)
+    persisted = _persisted(spark)
     with pytest.raises(SimulatedKill):
         run_index_job(spark, sf_dir, out, BUCKETS, runner=killed)
+    assert _persisted(spark) <= persisted  # the cached input is dropped
     m = Manifest(f"{out}/_manifest")
     done1 = m.completed("i2_assign")
     assert len(done1) == 2
@@ -363,8 +395,10 @@ def test_retrieval_job_kill_and_resume(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("tix_out"))
 
     killed = StageRunner(spark, out, BUCKETS, fail_after_buckets=2)
+    persisted = _persisted(spark)
     with pytest.raises(SimulatedKill):
         run_retrieval_job(spark, sf_dir, out, BUCKETS, runner=killed)
+    assert _persisted(spark) <= persisted  # the cached input is dropped
     m = Manifest(f"{out}/_manifest")
     done1 = m.completed("t1_tf")
     assert len(done1) == 2

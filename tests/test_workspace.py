@@ -102,6 +102,30 @@ def test_close_delete_and_manifest_roundtrip(spark, tmp_path, new_workspace):
         ws2.import_code(SF_A, "bad name!")
 
 
+def test_torn_manifest_write_keeps_previous(spark, tmp_path, monkeypatch):
+    """A manifest write that dies part-way leaves the previous
+    workspace.json byte-identical and loadable."""
+    from pathlib import Path
+
+    path = tmp_path / "workspace.json"
+    path.write_text(json.dumps({"alpha": SF_A, "beta": SF_B, "_flow_cache": {}}))
+    before = path.read_bytes()
+    ws = Workspace(spark, path)
+
+    def torn_write(self, data, *args, **kwargs):
+        with open(self, "w") as f:
+            f.write(data[: len(data) // 2])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(Path, "write_text", torn_write)
+    with pytest.raises(OSError, match="disk full"):
+        ws.delete("alpha")
+    monkeypatch.undo()
+    assert path.read_bytes() == before
+    assert {p.name for p in Workspace(spark, path).projects} == {"alpha", "beta"}
+    assert [p.name for p in tmp_path.iterdir()] == ["workspace.json"]
+
+
 def test_http_query_server(spark, new_workspace):
     """BridgeBase HTTP-server analog (BridgeBase.scala:403-418): boot the
     query server over a workspace and drive it with real HTTP requests —

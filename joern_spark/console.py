@@ -85,37 +85,52 @@ def sql(spark: SparkSession, starter: str, **params: str) -> DataFrame:
     return spark.sql(query, args=params) if params else spark.sql(query)
 
 
+# The console flow budget: the defaults of `flows` here and of
+# `Workspace.flows` / `cached_walk` / `walk_key`, so a flow asked through
+# any surface without budgets walks the same graph.
+FLOW_DEPTH, FLOW_CROSSINGS, FLOW_NESTING = 4, 1, 1
+
+
 def flows(
     g: GraphResult,
     src_pattern: str,
     dst_pattern: str,
-    max_depth: int = 4,
-    max_crossings: int = 1,
-    max_nesting: int = 1,
+    max_depth: int = FLOW_DEPTH,
+    max_crossings: int = FLOW_CROSSINGS,
+    max_nesting: int = FLOW_NESTING,
 ) -> DataFrame:
     """`joern-flow` analog (JoernFlow.scala:21-56: regex-selected
     sources/sinks + reachableByFlows from the CLI): turns whose text
     matches `src_pattern` flow to turns matching `dst_pattern` over the
     NEXT_TURN/LINKS_TO/SAME_AS union — patterns in, evidence paths out
     (src, dst, depth, crossings, path, labels), no DataFrame composition
-    required. The walk budget is the standard console budget; heavier
-    runs go through functions/hetero.named_flows directly (which can
-    also reuse a cached keep='all' walk)."""
+    required. This always walks afresh; `Workspace.flows` serves the
+    same rows from its persistent keep='all' walk cache when it can."""
     from pyspark.sql import functions as F_
 
     from joern_spark import schemas as S
     from joern_spark.functions.hetero import named_flows
 
     edges = g.edges.where(F_.col("label") != S.CONTAINS)
-    return named_flows(
-        g.transcripts,
-        src_pattern,
-        dst_pattern,
-        edges=edges,
-        max_depth=max_depth,
-        max_crossings=max_crossings,
-        max_nesting=max_nesting,
-    ).select(
+    return flow_rows(
+        named_flows(
+            g.transcripts,
+            src_pattern,
+            dst_pattern,
+            edges=edges,
+            max_depth=max_depth,
+            max_crossings=max_crossings,
+            max_nesting=max_nesting,
+        )
+    )
+
+
+def flow_rows(paths: DataFrame) -> DataFrame:
+    """The flow answer's six columns: node and label evidence joined
+    with '->' (named_flows rows in, console/HTTP rows out)."""
+    from pyspark.sql import functions as F_
+
+    return paths.select(
         "src",
         "dst",
         "depth",

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from joern_spark.functions.graph import FRONTIER_BROADCAST_MAX
 from joern_spark.functions.salted import salted_min_k
+from joern_spark.operators.assemble import turn_id
 
 
 @dataclass(frozen=True)
@@ -302,6 +303,17 @@ def annotate_path_elements(paths: DataFrame) -> DataFrame:
     )
 
 
+def asking_turns(triples_raw: DataFrame) -> DataFrame:
+    """The canonical walk's seed set: every turn that asks about an
+    entity (a `queried_about` triple), as distinct `conv_id:turn_idx`
+    ids."""
+    return (
+        triples_raw.where(F.col("pred") == "queried_about")
+        .select(turn_id().alias("id"))
+        .dropDuplicates()
+    )
+
+
 def named_flows(
     transcripts: DataFrame,
     src_pattern: str,
@@ -331,17 +343,14 @@ def named_flows(
     exactly the asking turns). At 100 TB the cached derivation is three
     semi-joins against an already-materialized table instead of a
     corpus-wide multi-round walk."""
-    tid = F.concat(
-        F.col("conv_id"), F.lit(":"), F.col("turn_idx").cast("string")
-    )
     sources = (
         transcripts.where(F.col("text").rlike(src_pattern))
-        .select(tid.alias("id"))
+        .select(turn_id().alias("id"))
         .dropDuplicates()
     )
     sinks = (
         transcripts.where(F.col("text").rlike(dst_pattern))
-        .select(tid.alias("id"))
+        .select(turn_id().alias("id"))
         .dropDuplicates()
     )
     if paths is not None:

@@ -1616,18 +1616,9 @@ def _flow_paths(transcripts: DataFrame) -> DataFrame:
     path table the flow scanners filter. Seeds and step semantics match
     the registered tpg_cross_paths walk; keep='all' because scanner
     predicates quantify over PATHS, not (src, dst) representatives."""
-    from joern_spark.functions.hetero import expand_paths_hetero
+    from joern_spark.functions.hetero import asking_turns, expand_paths_hetero
 
-    seeds = (
-        extract_triples_raw(transcripts)
-        .where(F.col("pred") == "queried_about")
-        .select(
-            F.concat(
-                "conv_id", F.lit(":"), F.col("turn_idx").cast("string")
-            ).alias("id")
-        )
-        .dropDuplicates()
-    )
+    seeds = asking_turns(extract_triples_raw(transcripts))
     return expand_paths_hetero(
         seeds,
         _flow_edges(transcripts),

@@ -857,20 +857,11 @@ def _hetero_steps(spark, sf_dir):
 
 
 def _all_paths(spark, sf_dir):
-    from joern_spark.functions.hetero import expand_paths_hetero
+    from joern_spark.functions.hetero import asking_turns, expand_paths_hetero
 
     def build():
         t = _t(spark, sf_dir)
-        seeds = (
-            extract_triples_raw(t)
-            .where(F.col("pred") == "queried_about")
-            .select(
-                F.concat(
-                    "conv_id", F.lit(":"), F.col("turn_idx").cast("string")
-                ).alias("id")
-            )
-            .dropDuplicates()
-        )
+        seeds = asking_turns(extract_triples_raw(t))
         return expand_paths_hetero(
             seeds,
             _hetero_edges(spark, sf_dir),
@@ -987,6 +978,7 @@ def q_cross_paths_incremental(spark, sf_dir):
     agnostic and the declared sample keeps the gate's double walk
     proportionate."""
     from joern_spark.functions.hetero import (
+        asking_turns,
         expand_paths_hetero,
         incremental_paths,
         max_length_paths,
@@ -1007,14 +999,7 @@ def q_cross_paths_incremental(spark, sf_dir):
     base_steps = steps_all.where(~in_delta)
     delta_steps = steps_all.where(in_delta)
     seeds = (
-        extract_triples_raw(t)
-        .where(F.col("pred") == "queried_about")
-        .select(
-            F.concat(
-                "conv_id", F.lit(":"), F.col("turn_idx").cast("string")
-            ).alias("id")
-        )
-        .dropDuplicates()
+        asking_turns(extract_triples_raw(t))
         .where(md5_long(F.col("id")) % 4 == 0)
     )
     # depth 3 / crossings 1 — the maintenance property is budget-agnostic
@@ -1051,18 +1036,11 @@ def q_cross_paths_nested(spark, sf_dir):
     so a second descent is reachable: each crossing costs two hops,
     into the entity layer and out."""
     from joern_spark.functions.hashing import md5_long
-    from joern_spark.functions.hetero import expand_paths_hetero
+    from joern_spark.functions.hetero import asking_turns, expand_paths_hetero
 
     t = _t(spark, sf_dir)
     seeds = (
-        extract_triples_raw(t)
-        .where(F.col("pred") == "queried_about")
-        .select(
-            F.concat(
-                "conv_id", F.lit(":"), F.col("turn_idx").cast("string")
-            ).alias("id")
-        )
-        .dropDuplicates()
+        asking_turns(extract_triples_raw(t))
         .where(F.pmod(md5_long(F.col("id")), F.lit(16)) == 0)
     )
     return expand_paths_hetero(

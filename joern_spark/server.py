@@ -14,6 +14,9 @@ Endpoints (JSON in/out):
                 "max_crossings"?, "max_nesting"?, "limit"?}
                             — joern-flow analog: regex-selected
                               sources/sinks + reachableByFlows
+                              via Workspace.flows: served from the
+                              workspace walk cache when its asking
+                              turns cover the sources
   POST /heavy_hitters {"k"?, "limit"?}
                             — Count-Min hub-entity estimates over the
                               active project's triples
@@ -43,25 +46,29 @@ Endpoints (JSON in/out):
                               own query port, not a public sandbox —
                               bind stays on localhost by default)
 
-Every query endpoint goes through the workspace's held graph
-(`Workspace.sql` / `.cpg`): the active project's first request persists
-its served layers (workspace.HELD_LAYERS) and later requests read them.
-`/sql` holds the active project the same way, so SQL over `tpg_*` reads
-the held layers too.
+Each endpoint is one `ENDPOINTS` entry. Every query endpoint goes
+through the workspace's held graph (`Workspace.sql` / `.cpg` /
+`.pinned`): the active project's first request persists its served
+layers (workspace.HELD_LAYERS) and later requests read them. `/sql`
+holds and pins the active project the same way, so SQL over `tpg_*`
+reads the held layers of the project that was active when it arrived.
 
 Responses: {"columns": [...], "rows": [[...], ...], "n": N} for queries,
 {"error": msg} with a 4xx/5xx status on failure. Rows are JSON-safe
 (timestamps/decimals/bytes stringified). `limit` caps the collect at
 DEFAULT_LIMIT unless given — the server never ships an unbounded result
-to the driver.
+to the driver; a negative `limit` is a 400.
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from joern_spark.console import STARTERS, man
+from pyspark.sql import DataFrame
+
+from joern_spark import console
 from joern_spark.workspace import Workspace
 
 DEFAULT_LIMIT = 1000
@@ -88,6 +95,73 @@ def _df_payload(df, limit: int) -> dict:
     }
 
 
+def _projects(ws: Workspace, req: dict) -> dict:
+    return {
+        "projects": [
+            {"name": p.name, "sf_dir": str(p.sf_dir), "open": p.is_open}
+            for p in ws.projects
+        ],
+        "active": ws.active,
+    }
+
+
+def _query(ws: Workspace, req: dict) -> DataFrame:
+    starter = req["starter"]
+    if starter not in console.STARTERS:
+        raise ValueError(f"unknown starter {starter!r}")
+    return ws.sql(starter, **req.get("params", {}))
+
+
+def _sql(ws: Workspace, req: dict) -> DataFrame:
+    # analysed with the active project pinned and held, like /query;
+    # 400s cleanly when nothing is active
+    with ws.pinned():
+        return ws.spark.sql(req["sql"])
+
+
+def _flows(ws: Workspace, req: dict) -> DataFrame:
+    keys = ("max_depth", "max_crossings", "max_nesting")
+    budgets = {k: int(req[k]) for k in keys if k in req}
+    return ws.flows(req["src_pattern"], req["dst_pattern"], **budgets)
+
+
+def _quantiles(ws: Workspace, req: dict) -> DataFrame:
+    qs = [float(q) for q in req.get("qs", [0.5, 0.9, 0.99])]
+    return console.turn_quantiles(ws.cpg, qs=qs)
+
+
+def _boilerplate(ws: Workspace, req: dict) -> DataFrame:
+    return console.boilerplate(
+        ws.cpg,
+        n=int(req.get("n", 4)),
+        min_df=int(req.get("min_df", 2)),
+        k=int(req.get("k", 20)),
+    )
+
+
+def _top_k(probe: Callable) -> Callable[[Workspace, dict], DataFrame]:
+    """A console probe over the active graph with a `k` (default 20)."""
+    return lambda ws, req: probe(ws.cpg, k=int(req.get("k", 20)))
+
+
+# (method, path) → handler(workspace, request body) → DataFrame | dict.
+ENDPOINTS: dict[tuple[str, str], Callable[[Workspace, dict], DataFrame | dict]] = {
+    ("GET", "/starters"): lambda ws, req: {n: console.man(n) for n in console.STARTERS},
+    ("GET", "/projects"): _projects,
+    ("POST", "/open"): lambda ws, req: {"active": ws.open(req["name"]).name},
+    ("POST", "/query"): _query,
+    ("POST", "/sql"): _sql,
+    ("POST", "/flows"): _flows,
+    ("POST", "/heavy_hitters"): _top_k(console.heavy_hitters),
+    ("POST", "/quantiles"): _quantiles,
+    ("POST", "/boilerplate"): _boilerplate,
+    ("POST", "/skew"): _top_k(console.skew),
+    ("POST", "/tool_seqs"): lambda ws, req: console.tool_seqs(ws.cpg),
+    ("POST", "/pmi"): _top_k(console.pmi),
+    ("POST", "/timeline"): lambda ws, req: console.timeline(ws.cpg),
+}
+
+
 class QueryServer:
     """Wrap a Workspace in an HTTP server. `port=0` picks an ephemeral
     port (read it back from `.port`); `serve_forever` blocks, `start`
@@ -109,134 +183,27 @@ class QueryServer:
                 self.end_headers()
                 self.wfile.write(body)
 
-            def do_GET(self):  # noqa: N802 — http.server contract
+            def _dispatch(self) -> None:
                 try:
-                    if self.path == "/starters":
-                        self._send({name: man(name) for name in STARTERS})
-                    elif self.path == "/projects":
-                        ws = outer.workspace
-                        active = ws._active
-                        self._send(
-                            {
-                                "projects": [
-                                    {"name": p.name, "sf_dir": str(p.sf_dir),
-                                     "open": p.is_open}
-                                    for p in ws.projects
-                                ],
-                                "active": active,
-                            }
-                        )
-                    else:
+                    handler = ENDPOINTS.get((self.command, self.path))
+                    if handler is None:
                         self._send({"error": f"unknown path {self.path}"}, 404)
-                except Exception as e:  # noqa: BLE001 — surface as JSON
-                    self._send({"error": str(e)}, 500)
-
-            def do_POST(self):  # noqa: N802 — http.server contract
-                try:
+                        return
                     n = int(self.headers.get("Content-Length", "0"))
                     req = json.loads(self.rfile.read(n) or b"{}")
-                    ws = outer.workspace
                     limit = int(req.get("limit", DEFAULT_LIMIT))
-                    if self.path == "/open":
-                        p = ws.open(req["name"])
-                        self._send({"active": p.name})
-                    elif self.path == "/query":
-                        starter = req["starter"]
-                        if starter not in STARTERS:
-                            self._send(
-                                {"error": f"unknown starter {starter!r}"}, 400
-                            )
-                            return
-                        df = ws.sql(starter, **req.get("params", {}))
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/sql":
-                        # hold the active project like /query does;
-                        # 400s cleanly when nothing is active
-                        ws.project().hold(ws.spark)
-                        df = ws.spark.sql(req["sql"])
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/flows":
-                        # joern-flow analog: regex-selected sources/sinks
-                        # + reachableByFlows over the active project
-                        from joern_spark.console import flows as _flows
-
-                        df = _flows(
-                            ws.cpg,
-                            req["src_pattern"],
-                            req["dst_pattern"],
-                            max_depth=int(req.get("max_depth", 4)),
-                            max_crossings=int(req.get("max_crossings", 1)),
-                            max_nesting=int(req.get("max_nesting", 1)),
-                        )
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/heavy_hitters":
-                        # Count-Min hub-entity probe over the active
-                        # project's triples (console.heavy_hitters)
-                        from joern_spark.console import (
-                            heavy_hitters as _hh,
-                        )
-
-                        df = _hh(ws.cpg, k=int(req.get("k", 20)))
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/quantiles":
-                        # histogram-sketch turn-length quantiles per
-                        # role (console.turn_quantiles)
-                        from joern_spark.console import (
-                            turn_quantiles as _tq,
-                        )
-
-                        qs = [float(q) for q in req.get("qs", [0.5, 0.9, 0.99])]
-                        df = _tq(ws.cpg, qs=qs)
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/skew":
-                        # exact key-skew profile of the triple objects
-                        # (console.skew — plans/profile)
-                        from joern_spark.console import skew as _sk
-
-                        df = _sk(ws.cpg, k=int(req.get("k", 20)))
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/tool_seqs":
-                        # tool-call bigram mining (console.tool_seqs)
-                        from joern_spark.console import (
-                            tool_seqs as _ts,
-                        )
-
-                        df = _ts(ws.cpg)
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/pmi":
-                        # NPMI entity-association probe (console.pmi)
-                        from joern_spark.console import pmi as _pmi
-
-                        df = _pmi(ws.cpg, k=int(req.get("k", 20)))
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/timeline":
-                        # entity freshness probe (console.timeline)
-                        from joern_spark.console import (
-                            timeline as _tl,
-                        )
-
-                        df = _tl(ws.cpg)
-                        self._send(_df_payload(df, limit))
-                    elif self.path == "/boilerplate":
-                        # repeated turn-text n-gram spans across the
-                        # active project (console.boilerplate)
-                        from joern_spark.console import (
-                            boilerplate as _bp,
-                        )
-
-                        df = _bp(
-                            ws.cpg,
-                            n=int(req.get("n", 4)),
-                            min_df=int(req.get("min_df", 2)),
-                            k=int(req.get("k", 20)),
-                        )
-                        self._send(_df_payload(df, limit))
-                    else:
-                        self._send({"error": f"unknown path {self.path}"}, 404)
+                    if limit < 0:
+                        raise ValueError(f"limit must be >= 0, got {limit}")
+                    out = handler(outer.workspace, req)
+                    if isinstance(out, DataFrame):
+                        out = _df_payload(out, limit)
+                    self._send(out)
                 except (KeyError, ValueError, json.JSONDecodeError) as e:
                     self._send({"error": str(e)}, 400)
                 except Exception as e:  # noqa: BLE001 — surface as JSON
                     self._send({"error": str(e)}, 500)
+
+            do_GET = do_POST = _dispatch  # noqa: N815 — http.server contract
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.host, self.port = self._httpd.server_address[:2]

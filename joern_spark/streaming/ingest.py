@@ -351,6 +351,7 @@ def run_walk_increment(
     delta, and incremental_paths with an empty delta is a pure cache
     filter (tested)."""
     from joern_spark.functions.hetero import (
+        asking_turns,
         expand_paths_hetero,
         incremental_paths,
     )
@@ -368,16 +369,7 @@ def run_walk_increment(
         delta = hetero_edges_from(batch_df, linked).dropDuplicates(
             ["src", "dst", "label"]
         ).localCheckpoint(eager=True)
-        delta_seeds = (
-            extract_triples_raw(batch_df)
-            .where(F.col("pred") == "queried_about")
-            .select(
-                F.concat(
-                    "conv_id", F.lit(":"), F.col("turn_idx").cast("string")
-                ).alias("id")
-            )
-            .dropDuplicates()
-        )
+        delta_seeds = asking_turns(extract_triples_raw(batch_df))
         prev = read_walk(spark, state_dir)
         if prev is None:
             edges_all = delta

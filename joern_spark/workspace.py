@@ -36,20 +36,44 @@ queried holds no data.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
+import shutil
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from joern_spark.console import VIEWS, register_views
+from joern_spark import console
+from joern_spark import schemas as S
+from joern_spark.console import (
+    FLOW_CROSSINGS,
+    FLOW_DEPTH,
+    FLOW_NESTING,
+    VIEWS,
+    register_views,
+)
+from joern_spark.functions.hashing import md5_long
+from joern_spark.functions.hetero import (
+    asking_turns,
+    expand_paths_hetero,
+    named_flows,
+)
+from joern_spark.operators.assemble import turn_id
 from joern_spark.pipeline import GraphResult, run_pipeline
 from joern_spark.plans.manifest import write_atomic
 
 ACTIVE_PREFIX = "tpg_"
+# Walks the flow cache keeps on disk, newest fills first (as
+# ingest.KEEP_SNAPSHOTS bounds snapshots): every (depth, crossings,
+# nesting) budget a client asks for writes a full keep='all' walk.
+KEEP_WALKS = 3
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
@@ -114,13 +138,21 @@ class Project:
 
 class Workspace:
     """Project registry with one active project (WorkspaceManager +
-    Console.open/close/delete semantics)."""
+    Console.open/close/delete semantics).
+
+    Two locks, for a server that plans requests on parallel threads:
+    the registry lock covers the view registrations, the active project
+    and every manifest write, and a request holds it only while it
+    resolves, holds and analyses (`pinned`); the fill lock covers a flow
+    cache miss and is never taken by a point query."""
 
     def __init__(self, spark: SparkSession, path: str | Path | None = None):
         self.spark = spark
         self.path = Path(path) if path is not None else None
         self._projects: dict[str, Project] = {}
         self._active: str | None = None
+        self._lock = threading.RLock()
+        self._fill_lock = threading.Lock()
         if self.path is not None:
             for name, sf_dir in self._read_manifest().items():
                 if name.startswith("_"):  # manifest metadata (_flow_cache)
@@ -132,6 +164,11 @@ class Workspace:
     @property
     def projects(self) -> list[Project]:
         return list(self._projects.values())
+
+    @property
+    def active(self) -> str | None:
+        """The active project's name (None when nothing is open)."""
+        return self._active
 
     def project(self, name: str | None = None) -> Project:
         """Named project, or the active one (Console.project analog —
@@ -148,6 +185,15 @@ class Workspace:
         from this query on."""
         return self.project().hold(self.spark)
 
+    @contextmanager
+    def pinned(self) -> Iterator[GraphResult]:
+        """The active project's held graph, with no `open`/`close` until
+        the block exits. Spark resolves temp views when it analyses a
+        query, so SQL over `tpg_*` analysed inside the block stays on
+        this project even if the views are re-pointed right after."""
+        with self._lock:
+            yield self.cpg
+
     # -- lifecycle -----------------------------------------------------
 
     def import_code(self, sf_dir: str | float, name: str) -> Project:
@@ -157,44 +203,48 @@ class Workspace:
             raise ValueError(
                 f"project name {name!r} must be a valid view-prefix identifier"
             )
-        if name in self._projects:
-            self._projects[name].release()
-        self._projects[name] = Project(name, sf_dir)
-        self._save()
-        return self.open(name)
+        with self._lock:
+            if name in self._projects:
+                self._projects[name].release()
+            self._projects[name] = Project(name, sf_dir)
+            self._save()
+            return self.open(name)
 
     def open(self, name: str) -> Project:
         """Make `name` active: build/reuse its graph, register its views
         under `{name}_` AND re-point the default `tpg_*` views at it
         (Console.open, Console.scala:177-196)."""
-        p = self._projects[name]
-        g = p.graph(self.spark)
-        register_views(g, prefix=f"{name}_")
-        register_views(g, prefix=ACTIVE_PREFIX)
-        self._active = name
-        return p
+        with self._lock:
+            p = self._projects[name]
+            g = p.graph(self.spark)
+            register_views(g, prefix=f"{name}_")
+            register_views(g, prefix=ACTIVE_PREFIX)
+            self._active = name
+            return p
 
     def close(self, name: str | None = None) -> Project:
         """Drop the project's views, unpersist its held layers and drop
         its cached graph; an empty name closes the active project
         (Console.close, Console.scala:394-396). The registry entry stays
         — `open` replans lazily."""
-        p = self.project(name)
-        for layer in VIEWS:
-            self.spark.catalog.dropTempView(f"{p.name}_{layer}")
-        if self._active == p.name:
+        with self._lock:
+            p = self.project(name)
             for layer in VIEWS:
-                self.spark.catalog.dropTempView(f"{ACTIVE_PREFIX}{layer}")
-            self._active = None
-        p.release()
-        return p
+                self.spark.catalog.dropTempView(f"{p.name}_{layer}")
+            if self._active == p.name:
+                for layer in VIEWS:
+                    self.spark.catalog.dropTempView(f"{ACTIVE_PREFIX}{layer}")
+                self._active = None
+            p.release()
+            return p
 
     def delete(self, name: str) -> None:
         """Remove a project from the registry entirely
         (WorkspaceManager.removeProject, WorkspaceManager.scala:68)."""
-        self.close(name)  # dropTempView is a no-op for never-opened projects
-        del self._projects[name]
-        self._save()
+        with self._lock:
+            self.close(name)  # dropTempView is a no-op for never-opened projects
+            del self._projects[name]
+            self._save()
 
     # -- flow-path walk cache -------------------------------------------
     #
@@ -202,151 +252,110 @@ class Workspace:
     # session (Engine.scala:133-143 dispatches solver tasks against a
     # shared result table; HeldTaskCompletion finishes outstanding ones).
     # Here the expensive shared artifact is the keep='all' realizable
-    # walk; the session memo (queries._PATHS_CACHE) already dedups it
-    # within one process, and this cache persists it ACROSS sessions:
-    # parquet under <workspace>_flowcache/<key>/, keyed in the manifest
-    # by (edge-table fingerprint, walk budgets, semantics), so tomorrow's
+    # walk from every asking turn; this cache persists it ACROSS
+    # sessions: parquet under <workspace>_flowcache/<key>/, keyed in the
+    # manifest by (edge-table fingerprint, walk budgets), so tomorrow's
     # console reopens today's corpus and flow queries skip the walk.
+    #
+    # `flows` is the one flow entry point (the server's /flows calls
+    # it); it and the walk share console.flows's budget defaults. A miss
+    # walks, writes and records the key under the fill lock, so two
+    # first requests fill one directory once. Each fill keeps the
+    # newest KEEP_WALKS keys and deletes every other directory under
+    # the cache root, so clients choosing budgets cannot grow it.
 
     def walk_key(
         self,
-        max_depth: int = 4,
-        max_crossings: int = 2,
-        max_nesting: int = 1,
+        max_depth: int = FLOW_DEPTH,
+        max_crossings: int = FLOW_CROSSINGS,
+        max_nesting: int = FLOW_NESTING,
     ) -> str:
-        """Cache key: md5 over the edge-table fingerprint (count +
-        order-insensitive bit_xor of row hashes — one scan, no overflow,
-        ANSI-safe) and the walk budgets. A corpus or semantics change
-        flips the fingerprint and misses cleanly."""
-        import hashlib
-
-        from pyspark.sql import functions as F
-
-        from joern_spark.functions.hashing import md5_long
-
-        g = self.cpg
-        row = g.edges.select(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(
-                md5_long(F.concat_ws("|", "src", "dst", "label"))
-            ).alias("x"),
-        ).collect()[0]
-        raw = f"{row['n']}:{row['x']}:{max_depth}:{max_crossings}:{max_nesting}"
-        return hashlib.md5(raw.encode()).hexdigest()[:16]
+        """Cache key of the active project's walk at these budgets."""
+        return _walk_key(self.cpg, max_depth, max_crossings, max_nesting)
 
     def cached_walk(
         self,
-        max_depth: int = 4,
-        max_crossings: int = 2,
-        max_nesting: int = 1,
+        max_depth: int = FLOW_DEPTH,
+        max_crossings: int = FLOW_CROSSINGS,
+        max_nesting: int = FLOW_NESTING,
     ) -> tuple[DataFrame, bool]:
         """(keep='all' walk, cache_hit): the canonical realizable walk
         from the queried_about starting points — read back from the
         workspace flow cache when the key matches, else computed once,
         written, and recorded in the manifest. Without a manifest path
         the walk is computed uncached (a scratch workspace)."""
-        from pyspark.sql import functions as F
+        return self._cached_walk(self.cpg, max_depth, max_crossings, max_nesting)
 
-        from joern_spark import schemas as S
-        from joern_spark.functions.hetero import expand_paths_hetero
+    def _cached_walk(self, g: GraphResult, *budgets: int) -> tuple[DataFrame, bool]:
+        if self.path is None:
+            return _walk(g, *budgets), False
+        root = self.path.parent / f"{self.path.stem}_flowcache"
+        key = _walk_key(g, *budgets)
+        cache_dir = root / key
+        hit = (cache_dir / "_SUCCESS").exists()
+        if not hit:
+            with self._fill_lock:
+                hit = (cache_dir / "_SUCCESS").exists()
+                if not hit:
+                    _walk(g, *budgets).write.mode("overwrite").parquet(str(cache_dir))
+                    self._keep_newest_walks(root, key)
+        return self.spark.read.parquet(str(cache_dir)), hit
 
-        key = self.walk_key(max_depth, max_crossings, max_nesting)
-        cache_dir = (
-            None
-            if self.path is None
-            else self.path.parent / f"{self.path.stem}_flowcache" / key
-        )
-        if cache_dir is not None and (cache_dir / "_SUCCESS").exists():
-            return self.spark.read.parquet(str(cache_dir)), True
-        g = self.cpg
-        seeds = (
-            g.triples_raw.where(F.col("pred") == "queried_about")
-            .select(
-                F.concat(
-                    "conv_id", F.lit(":"), F.col("turn_idx").cast("string")
-                ).alias("id")
-            )
-            .dropDuplicates()
-        )
-        walk = expand_paths_hetero(
-            seeds,
-            g.edges.where(F.col("label") != S.CONTAINS),
-            max_depth=max_depth,
-            max_crossings=max_crossings,
-            max_nesting=max_nesting,
-            keep="all",
-        )
-        if cache_dir is not None:
-            walk.write.mode("overwrite").parquet(str(cache_dir))
+    def _keep_newest_walks(self, root: Path, key: str) -> None:
+        """Record `key` as the newest cached walk in the manifest, keep
+        the newest KEEP_WALKS there, and delete every other directory
+        under `root` (runs under the fill lock)."""
+        with self._lock:
             manifest = self._read_manifest()
-            manifest.setdefault("_flow_cache", {})[key] = str(cache_dir)
+            keys = [k for k in manifest.get("_flow_cache", {}) if k != key]
+            kept = (keys + [key])[-KEEP_WALKS:]
+            manifest["_flow_cache"] = {k: str(root / k) for k in kept}
             self._write_manifest(manifest)
-            return self.spark.read.parquet(str(cache_dir)), False
-        return walk, False
+        for d in root.iterdir():
+            if d.name not in kept:
+                shutil.rmtree(d, ignore_errors=True)
 
     def flows(
         self,
         src_pattern: str,
         dst_pattern: str,
-        max_depth: int = 4,
-        max_crossings: int = 2,
-        max_nesting: int = 1,
+        max_depth: int = FLOW_DEPTH,
+        max_crossings: int = FLOW_CROSSINGS,
+        max_nesting: int = FLOW_NESTING,
     ) -> DataFrame:
-        """Named flow over the persistent walk cache: when every
-        src_pattern-matched turn is covered by the cached walk's seed
-        set (one cheap anti-join probe), the result derives from the
-        cache with three semi-joins; otherwise it falls back to a fresh
-        regex-seeded walk (console.flows semantics)."""
-        from pyspark.sql import functions as F
-
-        from joern_spark import console
-        from joern_spark.functions.hetero import named_flows
-
+        """Named flow, the rows of console.flows: when every
+        src_pattern-matched turn is an asking turn (one cheap anti-join
+        probe), the result derives from the cached walk with three
+        semi-joins; otherwise, or without a manifest path to cache
+        under, it is a fresh regex-seeded walk (console.flows)."""
         g = self.cpg
-        tid = F.concat(
-            F.col("conv_id"), F.lit(":"), F.col("turn_idx").cast("string")
-        )
-        wanted = (
-            g.transcripts.where(F.col("text").rlike(src_pattern))
-            .select(tid.alias("id"))
-            .dropDuplicates()
-        )
-        covered = (
-            g.triples_raw.where(F.col("pred") == "queried_about")
-            .select(tid.alias("id"))
-            .dropDuplicates()
-        )
-        uncovered = wanted.join(covered, "id", "left_anti").limit(1).count()
-        if uncovered == 0:
-            paths, _ = self.cached_walk(max_depth, max_crossings, max_nesting)
-            return named_flows(
-                g.transcripts,
-                src_pattern,
-                dst_pattern,
-                max_depth=max_depth,
-                max_crossings=max_crossings,
-                paths=paths,
-            ).select(
-                "src",
-                "dst",
-                "depth",
-                "crossings",
-                F.array_join("path", "->").alias("path"),
-                F.array_join("labels", "->").alias("labels"),
+        budgets = (max_depth, max_crossings, max_nesting)
+        if self.path is not None:
+            wanted = g.transcripts.where(F.col("text").rlike(src_pattern))
+            uncovered = wanted.select(turn_id().alias("id")).join(
+                asking_turns(g.triples_raw), "id", "left_anti"
             )
-        return console.flows(
-            g, src_pattern, dst_pattern, max_depth, max_crossings, max_nesting
-        )
+            if uncovered.limit(1).count() == 0:
+                paths, _ = self._cached_walk(g, *budgets)
+                return console.flow_rows(
+                    named_flows(
+                        g.transcripts,
+                        src_pattern,
+                        dst_pattern,
+                        max_depth=max_depth,
+                        max_crossings=max_crossings,
+                        paths=paths,
+                    )
+                )
+        return console.flows(g, src_pattern, dst_pattern, *budgets)
 
     # -- queries -------------------------------------------------------
 
     def sql(self, starter: str, **params: str) -> DataFrame:
         """Run a console starter against the ACTIVE project's held
         layers (raises if nothing is active)."""
-        from joern_spark import console
-
-        self.project().hold(self.spark)
-        return console.sql(self.spark, starter, **params)
+        with self.pinned():
+            return console.sql(self.spark, starter, **params)
 
     def _save(self) -> None:
         if self.path is not None:
@@ -362,3 +371,30 @@ class Workspace:
     def _write_manifest(self, manifest: dict) -> None:
         # atomic: a write that dies part-way leaves the previous manifest
         write_atomic(self.path, json.dumps(manifest, indent=1))
+
+
+def _walk(
+    g: GraphResult, max_depth: int, max_crossings: int, max_nesting: int
+) -> DataFrame:
+    """The keep='all' realizable walk from every asking turn."""
+    return expand_paths_hetero(
+        asking_turns(g.triples_raw),
+        g.edges.where(F.col("label") != S.CONTAINS),
+        max_depth=max_depth,
+        max_crossings=max_crossings,
+        max_nesting=max_nesting,
+        keep="all",
+    )
+
+
+def _walk_key(g: GraphResult, *budgets: int) -> str:
+    """Cache key: md5 over the edge-table fingerprint (count +
+    order-insensitive bit_xor of row hashes — one scan, no overflow,
+    ANSI-safe) and the walk budgets. A corpus or semantics change flips
+    the fingerprint and misses cleanly."""
+    row = g.edges.select(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(md5_long(F.concat_ws("|", "src", "dst", "label"))).alias("x"),
+    ).collect()[0]
+    raw = ":".join(str(v) for v in (row["n"], row["x"], *budgets))
+    return hashlib.md5(raw.encode()).hexdigest()[:16]

@@ -4,6 +4,7 @@ active-project view re-pointing, close/delete, manifest round-trip, and
 the held graph (served layers persisted on a project's first query)."""
 
 import json
+import sys
 import threading
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
@@ -11,7 +12,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 from pyspark import StorageLevel
 
-from joern_spark.workspace import HELD_LAYERS, Workspace
+from joern_spark.workspace import HELD_LAYERS, KEEP_WALKS, Project, Workspace
 
 SF_A = 0.0006  # ≈ 8k turns
 SF_B = 0.0003  # ≈ 4k turns
@@ -194,6 +195,22 @@ def test_http_query_server(spark, new_workspace):
         assert status == 400 and "unknown starter" in out["error"]
         status, out = get("/nope")
         assert status == 404
+        # a negative limit is the client's error, not a Spark failure
+        status, out = post("/query", {"starter": "conversations", "limit": -1})
+        assert status == 400 and "limit" in out["error"]
+
+        # two concurrent first /flows fill the workspace walk cache once:
+        # both succeed with the same rows, one directory, one manifest entry
+        body = {"src_pattern": FLOW_SRC, "dst_pattern": FLOW_DST,
+                "max_depth": 3, "limit": 10**7}
+        with ThreadPoolExecutor(2) as pool:
+            (s1, out1), (s2, out2) = pool.map(
+                lambda _: post("/flows", body), range(2))
+        assert s1 == s2 == 200 and out1["n"] > 0
+        assert Counter(map(tuple, out1["rows"])) == Counter(
+            map(tuple, out2["rows"]))
+        assert len(json.loads(ws.path.read_text())["_flow_cache"]) == 1
+        assert len(list((ws.path.parent / "ws_flowcache").iterdir())) == 1
 
         # joern-flow analog: pattern-selected sources/sinks over HTTP —
         # db-query turns flowing to summary turns, evidence paths back
@@ -215,6 +232,24 @@ def test_http_query_server(spark, new_workspace):
         i_path = out["columns"].index("path")
         for row in out["rows"]:
             assert row[i_path].split("->")[0] == row[i_src]
+
+        # the routed /flows answers exactly what console.flows walks: from
+        # the cache at depth 3 and at the default budgets (depth 4), and
+        # through the fallback for sources outside the asking turns
+        from joern_spark import console
+
+        ask_p = r"^Please check the weather in"
+        for src_p, depth in ((FLOW_SRC, 3), (FLOW_SRC, None), (ask_p, 3)):
+            req = {"src_pattern": src_p, "dst_pattern": FLOW_DST,
+                   "limit": 10**7}
+            kw = {}
+            if depth is not None:
+                req["max_depth"] = kw["max_depth"] = depth
+            status, out = post("/flows", req)
+            want = console.flows(ws.cpg, src_p, FLOW_DST, **kw).collect()
+            assert status == 200 and out["n"] == len(want) > 0
+            assert Counter(map(tuple, out["rows"])) == Counter(map(tuple, want))
+        assert len(json.loads(ws.path.read_text())["_flow_cache"]) == 2
         # missing pattern → 400
         status, out = post("/flows", {"src_pattern": "^x"})
         assert status == 400
@@ -340,6 +375,75 @@ def test_flow_walk_cache_across_sessions(spark, tmp_path, new_workspace):
                            max_crossings=1)
     assert fallback.exceptAll(direct).count() == 0
     assert direct.exceptAll(fallback).count() == 0
+
+    # the cache is bounded: after KEEP_WALKS + 1 more fills, exactly the
+    # newest KEEP_WALKS walks are left, on disk and in the manifest
+    budgets = [(depth, 0) for depth in range(1, KEEP_WALKS + 2)]
+    for depth, crossings in budgets:
+        _, hit = ws2.cached_walk(max_depth=depth, max_crossings=crossings)
+        assert hit is False
+    kept = {ws2.walk_key(d, c) for d, c in budgets[-KEEP_WALKS:]}
+    assert {d.name for d in (tmp_path / "ws_flowcache").iterdir()} == kept
+    assert set(_json.loads(manifest.read_text())["_flow_cache"]) == kept
+    assert "cachep" in _json.loads(manifest.read_text())
+
+    # the same fills from more threads than cores, switching often: the
+    # manifest and the directories still agree on KEEP_WALKS walks
+    budgets = [(depth, 0, 2) for depth in range(1, KEEP_WALKS + 2)] * 2
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(len(budgets)) as pool:
+            futures = [pool.submit(ws2.cached_walk, *b) for b in budgets]
+            for f in futures:
+                f.result(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    on_disk = {d.name for d in (tmp_path / "ws_flowcache").iterdir()}
+    listed = _json.loads(manifest.read_text())
+    assert len(on_disk) == KEEP_WALKS and set(listed["_flow_cache"]) == on_disk
+    assert on_disk <= {ws2.walk_key(*b) for b in budgets}
+    assert "cachep" in listed
+
+
+def test_open_waits_for_a_request_in_flight(spark, new_workspace, monkeypatch):
+    """A request resolves, holds and analyses its SQL under the registry
+    lock, so an `open` that lands between its hold and its analysis
+    waits: the request answers from the project it started on, through
+    Workspace.sql and through the /sql handler alike."""
+    from joern_spark.server import ENDPOINTS
+
+    ws = new_workspace("ws.json")
+    ws.import_code(SF_B, "pin_b")
+    ws.import_code(SF_A, "pin_a")
+    n = {name: (spark.table(f"{name}_conversations").count(),
+                spark.table(f"{name}_turns").count())
+         for name in ("pin_a", "pin_b")}
+    assert n["pin_a"][0] != n["pin_b"][0] and n["pin_a"][1] != n["pin_b"][1]
+
+    hold, switchers = Project.hold, []
+
+    def hold_then_switch(self, spark_):
+        g = hold(self, spark_)
+        switched = threading.Event()
+        t = threading.Thread(target=lambda: (ws.open("pin_b"), switched.set()))
+        t.start()
+        switchers.append(t)
+        switched.wait(timeout=3)  # at most until the switch has happened
+        return g
+
+    monkeypatch.setattr(Project, "hold", hold_then_switch)
+    requests = (
+        (lambda: ws.sql("conversations").count(), n["pin_a"][0]),
+        (lambda: ENDPOINTS[("POST", "/sql")](
+            ws, {"sql": "SELECT * FROM tpg_turns"}).count(), n["pin_a"][1]),
+    )
+    for request, want in requests:
+        ws.open("pin_a")
+        got = request()
+        switchers.pop().join(timeout=60)
+        assert ws.active == "pin_b"
+        assert got == want
 
 
 # -- held graph ------------------------------------------------------------

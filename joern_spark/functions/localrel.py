@@ -13,9 +13,9 @@ round-trips serialize instead of overlapping).
 `local_df` instead renders the rows as a literal array<struct> exploded
 from a one-row range — a pure JVM expression tree evaluated with ZERO
 Python-worker involvement at any consumer (sub-ms per evaluation). Rows
-beyond `max_literal` (or containing NULLs, which would need per-column
-type annotation) fall back to plain `createDataFrame`; at that size the
-caller should be using a distributed plan anyway.
+beyond `LITERAL_RELATION_MAX` (or containing NULLs, which would need
+per-column type annotation) fall back to plain `createDataFrame`; at that
+size the caller should be using a distributed plan anyway.
 """
 
 from __future__ import annotations
@@ -31,10 +31,7 @@ LITERAL_RELATION_MAX = 4096
 
 
 def local_df(
-    spark: SparkSession,
-    rows: Iterable[Sequence],
-    schema: str,
-    max_literal: int = LITERAL_RELATION_MAX,
+    spark: SparkSession, rows: Iterable[Sequence], schema: str
 ) -> DataFrame:
     """A DataFrame over driver-local `rows` with `schema` (DDL string),
     backed by a JVM literal relation when small (see module docstring).
@@ -42,7 +39,7 @@ def local_df(
     rows = [tuple(r) for r in rows]
     if (
         not rows
-        or len(rows) > max_literal
+        or len(rows) > LITERAL_RELATION_MAX
         or any(v is None for r in rows for v in r)
     ):
         return spark.createDataFrame(rows, schema)
@@ -55,8 +52,11 @@ def local_df(
             for r in rows
         ]
     )
+    # One partition: range(1) alone spans defaultParallelism partitions,
+    # so writing the table leaves empty part files that a bounded
+    # limit() read of it then scans in extra jobs.
     return (
-        spark.range(1)
+        spark.range(0, 1, 1, 1)
         .select(F.explode(arr).alias("_kv"))
         .select([F.col(f"_kv.{f.name}") for f in target.fields])
         .to(target)

@@ -58,6 +58,13 @@ def same_as_pairs(transcripts: DataFrame) -> DataFrame:
     scan, before any triple assembly), so this costs one cheap pass instead
     of re-running the full multi-rule extractor — same result as
     `same_as_edges(extract_triples_raw(t))`."""
+    return alias_pairs(transcripts).dropDuplicates()
+
+
+def alias_pairs(transcripts: DataFrame) -> DataFrame:
+    """`same_as_pairs` without the dedup shuffle: one (a, b) row per alias
+    turn, repeats kept — for consumers that dedup anyway, such as the
+    union-find in `merge_canonical_map`."""
     rule = RULES_BY_NAME["alias"]
     m = transcripts.where(
         (F.col("role") == rule.role) & F.col("text").rlike(rule.pattern)
@@ -65,7 +72,7 @@ def same_as_pairs(transcripts: DataFrame) -> DataFrame:
     return m.select(
         normalize_surface_col(F.regexp_extract("text", rule.pattern, 1)).alias("a"),
         normalize_surface_col(F.regexp_extract("text", rule.pattern, 2)).alias("b"),
-    ).dropDuplicates()
+    )
 
 
 def _union_find_rows(edges: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -257,32 +264,66 @@ def canonicalize_triples(triples_raw: DataFrame, canonical_map: DataFrame) -> Da
     return t
 
 
-def merge_canonical_map(existing: DataFrame, new_pairs: DataFrame) -> DataFrame:
+def merge_canonical_map(
+    existing: DataFrame | None, new_pairs: DataFrame
+) -> DataFrame | None:
     """Incremental union-find: fold a DELTA of SAME_AS pairs into an
     existing canonical map WITHOUT re-solving the historical pair set —
     the entity-resolution analog of materialize.merge_triples (the
     streaming / Iceberg-MERGE maintenance path). Tested equal to the
-    one-shot `connected_components` over the unioned pair set.
+    one-shot `connected_components` over the unioned pair set, on both
+    paths below. `new_pairs` may repeat a pair. `existing=None` (no map
+    yet) is the one-shot solve of `new_pairs`. An empty delta returns
+    `existing` itself, so a caller can tell by identity that nothing
+    changed.
 
-    Only components TOUCHED by the delta are re-solved: each delta
-    endpoint resolves through the current map to its representative
-    (unseen endpoints stand for themselves), the delta collapses to a
-    pair set over representatives — ≤ 2·|delta| nodes, independent of
-    corpus size — components run on that reduced graph, and the full map
-    is rewritten through the resulting representative→representative
-    relabeling. min-label canon is preserved: the old canon is the min
-    of its old component, so the reduced solve's min over (old canons ∪
-    unseen keys) is the global min of the merged component.
+    Small maps (map + delta ≤ SMALL_COMPONENT_THRESHOLD rows) are
+    re-solved on the driver: the map's (entity_key, canon) rows plus the
+    delta pairs go through one union-find. That is exact because an old
+    canon is the min of its old component, so the min over a merged
+    component is the global min. Each side is read with one bounded
+    `limit(SMALL_COMPONENT_THRESHOLD + 1)` collect, so an oversized map
+    or delta falls through to the distributed recipe instead of pulling
+    unbounded rows to the driver.
 
-    Scale shape: the existing map never shuffles when the relabeling is
+    Above the threshold only components TOUCHED by the delta are
+    re-solved: each delta endpoint resolves through the current map to
+    its representative (unseen endpoints stand for themselves), the delta
+    collapses to a pair set over representatives — ≤ 2·|delta| nodes,
+    independent of corpus size — components run on that reduced graph,
+    and the full map is rewritten through the resulting
+    representative→representative relabeling (same min-label argument).
+
+    Scale shape: the canonical map is bounded by the alias vocabulary,
+    not the corpus, so the driver path is the common case. Above the
+    threshold the existing map never shuffles when the relabeling is
     small (broadcast below functions/joins.MAP_BROADCAST_THRESHOLD rows;
     plain shuffle join above — same thresholding as dedup_survivors);
     the reduced component solve is delta-bounded."""
+    cap = SMALL_COMPONENT_THRESHOLD + 1
+    delta = [tuple(r) for r in new_pairs.select("a", "b").limit(cap).collect()]
+    if not delta:
+        return existing
+    if len(delta) <= SMALL_COMPONENT_THRESHOLD:
+        old = [] if existing is None else [
+            tuple(r)
+            for r in existing.select("entity_key", "canon").limit(cap).collect()
+        ]
+        if len(old) + len(delta) <= SMALL_COMPONENT_THRESHOLD:
+            return _union_find_local(old + delta, new_pairs.sparkSession)
+    if existing is None:
+        return connected_components(new_pairs)
+    return _merge_distributed(existing, new_pairs)
+
+
+def _merge_distributed(existing: DataFrame, new_pairs: DataFrame) -> DataFrame:
     from joern_spark.functions.joins import broadcast_below
+
+    # the delta is read four times below; materialize it once
+    new_pairs = new_pairs.select("a", "b").localCheckpoint(eager=True)
     ex = existing.select("entity_key", "canon")
     resolved = (
-        new_pairs.select("a", "b")
-        .join(
+        new_pairs.join(
             ex.select(F.col("entity_key").alias("a"), F.col("canon").alias("_ca")),
             "a",
             "left",

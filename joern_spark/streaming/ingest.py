@@ -13,6 +13,11 @@ compaction over the streamed raw tables — the classic lambda-free
 "stream the cheap 95%, batch the stateful 5%" split. `run_increment`
 uses Trigger.AvailableNow so each invocation drains exactly the new
 files then stops — the pattern for cron-scheduled incremental jobs.
+The one exception is the canonical map, whose size is bounded by the
+alias vocabulary rather than the corpus: `run_alias_increment` folds
+each batch's SAME_AS pairs into it, re-solving it on the driver while
+it is small and by the delta-bounded distributed recipe above
+`canonicalize.SMALL_COMPONENT_THRESHOLD` rows.
 
 Every streaming query in this package runs through `drain`: one
 AvailableNow query over a checkpoint that either appends to a parquet
@@ -284,33 +289,28 @@ def run_alias_increment(
 ) -> None:
     """Incremental entity resolution: drain newly-landed transcript files
     and fold their SAME_AS pairs into the persisted canonical map via
-    `canonicalize.merge_canonical_map` — only components touched by the
-    delta are re-solved, the historical pair set is never replayed.
+    `canonicalize.merge_canonical_map`; the historical pair set is never
+    replayed. The map is bounded by the alias vocabulary, so it is
+    normally re-solved on the driver (one bounded read each of the
+    batch's pairs and of the map, one union-find, one snapshot write);
+    above `SMALL_COMPONENT_THRESHOLD` rows the delta-bounded distributed
+    recipe re-solves only the components the delta touches. A batch
+    without SAME_AS pairs commits nothing.
 
     Exactly-once note: foreachBatch side effects are at-least-once under
     crash-rerun (the offset commit is separate), but the fold is
     IDEMPOTENT — merging pairs already present in the map is a no-op by
     the merge==one-shot theorem (tested) — so at-least-once delivery
     still converges to the exact batch answer."""
-    from joern_spark.operators.canonicalize import (
-        connected_components,
-        merge_canonical_map,
-        same_as_pairs,
-    )
+    from joern_spark.operators.canonicalize import alias_pairs, merge_canonical_map
 
     store = _store(spark, state_dir, "cmap")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = same_as_pairs(batch_df).localCheckpoint(eager=True)
-        if pairs.isEmpty():
-            return
         cur = read_canonical_map(spark, state_dir)
-        merged = (
-            merge_canonical_map(cur, pairs)
-            if cur is not None
-            else connected_components(pairs)
-        )
-        store.commit(batch_id, {"": merged})
+        merged = merge_canonical_map(cur, alias_pairs(batch_df))
+        if merged is not cur:  # the same object back: no SAME_AS pairs
+            store.commit(batch_id, {"": merged})
 
     drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
 

@@ -19,10 +19,20 @@ def edges_df(spark, edges):
 
 
 def cmap(spark, pairs):
-    return {
-        r["entity_key"]: r["canon"]
-        for r in connected_components(pairs_df(spark, pairs)).collect()
-    }
+    return as_map(connected_components(pairs_df(spark, pairs)))
+
+
+def as_map(df):
+    return {r["entity_key"]: r["canon"] for r in df.collect()}
+
+
+def force_distributed(monkeypatch):
+    """Route every component solve and map merge through the distributed
+    recipe, with a fresh memo so no driver-solved result is reused."""
+    from joern_spark.operators import canonicalize as C
+
+    monkeypatch.setattr(C, "SMALL_COMPONENT_THRESHOLD", 0)
+    monkeypatch.setattr(C, "_CC_MEMO", {})
 
 
 def test_cc_chain(spark):
@@ -243,7 +253,7 @@ def test_connected_components_paths_agree(spark, monkeypatch):
         "a string, b string",
     )
     fast = {(r.entity_key, r.canon) for r in C.connected_components(pairs).collect()}
-    monkeypatch.setattr(C, "SMALL_COMPONENT_THRESHOLD", 0)
+    force_distributed(monkeypatch)
     slow = {(r.entity_key, r.canon) for r in C.connected_components(pairs).collect()}
     assert fast == slow
     assert ("c", "a") in fast and ("z", "x") in fast
@@ -345,11 +355,13 @@ def test_tag_readback_traversal(spark, make_transcripts, entities):
     assert all_tags.where(F.col("tag") == "unanswered-ask").count() == 1
 
 
-def test_merge_canonical_map_equals_oneshot(spark):
+def test_merge_canonical_map_equals_oneshot(spark, monkeypatch):
     """Incremental merge theorem: merge(CC(batch1), batch2) equals
     CC(batch1 ∪ batch2) — covering a delta that bridges two existing
     components, extends a component with a new key, creates a brand-new
-    component, and leaves an untouched component alone."""
+    component, and leaves an untouched component alone. Holds on the
+    driver path and on the distributed recipe (threshold forced to 0),
+    and merging into no map at all is the one-shot solve."""
     from joern_spark.operators.canonicalize import merge_canonical_map
 
     b1 = [("b", "c"), ("a", "b"), ("u", "v"), ("x", "y")]
@@ -368,12 +380,19 @@ def test_merge_canonical_map_equals_oneshot(spark):
     assert merged["w"] == "a" and merged["u"] == "a"
     assert merged["x"] == "x" and merged["y"] == "x"
     assert merged["p"] == "p" and merged["q"] == "p"
+    first = as_map(merge_canonical_map(None, pairs_df(spark, b1)))
+    assert first == cmap(spark, b1)
+
+    force_distributed(monkeypatch)
+    assert as_map(merge_canonical_map(base, pairs_df(spark, b2))) == merged
+    assert as_map(merge_canonical_map(None, pairs_df(spark, b1))) == first
 
 
-def test_merge_canonical_map_chain_across_batches(spark):
+def test_merge_canonical_map_chain_across_batches(spark, monkeypatch):
     """A long alias chain split across batches still converges to the
     global min, and a second merge composes (merge is associative with
-    respect to one-shot solving)."""
+    respect to one-shot solving) — on the driver path and on the
+    distributed recipe."""
     from joern_spark.operators.canonicalize import merge_canonical_map
 
     keys = [f"k{i:03d}" for i in range(12)]
@@ -385,6 +404,10 @@ def test_merge_canonical_map_chain_across_batches(spark):
     got = {r["entity_key"]: r["canon"] for r in m3.collect()}
     assert got == cmap(spark, all_pairs)
     assert set(got.values()) == {"k000"}
+
+    force_distributed(monkeypatch)
+    d2 = merge_canonical_map(m1, pairs_df(spark, b2))
+    assert as_map(merge_canonical_map(d2, pairs_df(spark, b3))) == got
 
 
 # --- general reaching definitions (gen/kill worklist kernel) -----------------

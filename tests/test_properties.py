@@ -284,7 +284,12 @@ def test_union_find_component_min(pairs):
 )
 def test_merge_canonical_map_matches_oneshot(spark, pairs, split):
     """merge(CC(prefix), suffix) == CC(all) for every random pair list
-    and split point (the incremental-maintenance theorem, randomized)."""
+    and split point (the incremental-maintenance theorem, randomized),
+    and the distributed recipe (threshold forced to 0) returns the same
+    map as the driver path."""
+    from unittest import mock
+
+    from joern_spark.operators import canonicalize as C
     from joern_spark.operators.canonicalize import (
         connected_components,
         merge_canonical_map,
@@ -310,6 +315,18 @@ def test_merge_canonical_map_matches_oneshot(spark, pairs, split):
         ).collect()
     }
     assert merged == oneshot, (b1, b2)
+    if b2:
+        with (
+            mock.patch.object(C, "SMALL_COMPONENT_THRESHOLD", 0),
+            mock.patch.object(C, "_CC_MEMO", {}),
+        ):
+            distributed = {
+                r["entity_key"]: r["canon"]
+                for r in merge_canonical_map(
+                    base, spark.createDataFrame(b2, "a string, b string")
+                ).collect()
+            }
+        assert distributed == merged, (b1, b2)
 
 
 # --- chunking: slicing arithmetic matches a brute-force reference -------------

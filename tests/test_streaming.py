@@ -390,6 +390,93 @@ def test_alias_increment_matches_batch(spark, tmp_path_factory):
     assert still == got2
 
 
+def _alias_rows(conv, pairs):
+    import datetime as dt
+
+    return [
+        (conv, i, "user", f"Note that {a} is also known as {b}.", None,
+         dt.datetime(2024, 6, 1))
+        for i, (a, b) in enumerate(pairs)
+    ]
+
+
+def test_alias_fold_without_pairs_commits_nothing(spark, tmp_path_factory):
+    """A drained batch with no SAME_AS pairs writes no snapshot and moves
+    no pointer — neither before the first map exists nor after."""
+    import datetime as dt
+    import os
+
+    root = tmp_path_factory.mktemp("alias_empty")
+    landing, state, ckpt = (str(root / k) for k in ("landing", "state", "ckpt"))
+    os.makedirs(landing)
+    plain = [("zz_plain", 0, "user", "What is the weather in Lima?", None,
+              dt.datetime(2024, 6, 1))]
+    pointer = os.path.join(state, "CURRENT")
+
+    _land_rows(spark, landing, plain, "p1")
+    ingest.run_alias_increment(spark, landing, state, ckpt)
+    assert not os.path.exists(pointer)
+    assert ingest.read_canonical_map(spark, state) is None
+
+    _land_rows(spark, landing, _alias_rows("zz_a", [("Paris", "Lutetia")]), "a1")
+    ingest.run_alias_increment(spark, landing, state, ckpt)
+    snaps = ingest._snapshots(state)
+    with open(pointer) as f:
+        committed = f.read()
+    assert len(snaps) == 1 and committed == snaps[0]
+
+    _land_rows(spark, landing, plain, "p2")
+    ingest.run_alias_increment(spark, landing, state, ckpt)
+    assert ingest._snapshots(state) == snaps
+    with open(pointer) as f:
+        assert f.read() == committed
+
+
+def test_alias_increment_above_literal_relation(spark, tmp_path_factory, monkeypatch):
+    """With the literal-relation cap forced below the map size, the
+    driver-solved map is a plain createDataFrame: a two-drain fold still
+    equals the batch solve, and its snapshot reads back under
+    CMAP_SCHEMA."""
+    import os
+
+    from joern_spark.functions import localrel
+    from joern_spark.operators.canonicalize import (
+        connected_components,
+        same_as_pairs,
+    )
+
+    monkeypatch.setattr(localrel, "LITERAL_RELATION_MAX", 2)
+    root = tmp_path_factory.mktemp("alias_wide")
+    landing, state, ckpt = (str(root / k) for k in ("landing", "state", "ckpt"))
+    os.makedirs(landing)
+
+    def batch_map():
+        return {
+            r["entity_key"]: r["canon"]
+            for r in connected_components(
+                same_as_pairs(spark.read.parquet(landing))
+            ).collect()
+        }
+
+    _land_rows(spark, landing, _alias_rows(
+        "zz_w1", [("Paris", "Lutetia"), ("Rome", "Urbs"), ("Kyiv", "Kiev")]), "w1")
+    ingest.run_alias_increment(spark, landing, state, ckpt)
+    _land_rows(spark, landing, _alias_rows(
+        "zz_w2", [("Lutetia", "Rome"), ("Oslo", "Kristiania")]), "w2")
+    ingest.run_alias_increment(spark, landing, state, ckpt)
+
+    got = {
+        r["entity_key"]: r["canon"]
+        for r in ingest.read_canonical_map(spark, state).collect()
+    }
+    assert len(got) > localrel.LITERAL_RELATION_MAX
+    assert got == batch_map()
+    assert got["urbs"] == "lutetia" and got["kristiania"] == "kristiania"
+    snap = os.path.join(state, ingest._snapshots(state)[-1])
+    assert spark.read.parquet(snap).schema == spark.createDataFrame(
+        [], ingest.CMAP_SCHEMA).schema
+
+
 def test_faithfulness_stream_across_drains_and_batch_parity(
     spark, tmp_path_factory
 ):

@@ -14,8 +14,11 @@ round-trips serialize instead of overlapping).
 from a one-row range — a pure JVM expression tree evaluated with ZERO
 Python-worker involvement at any consumer (sub-ms per evaluation). Rows
 beyond `LITERAL_RELATION_MAX` (or containing NULLs, which would need
-per-column type annotation) fall back to plain `createDataFrame`; at that
-size the caller should be using a distributed plan anyway.
+per-column type annotation) fall back to a `createDataFrame` over ONE
+parallelized slice: a downstream evaluation then pays one Python-worker
+round trip instead of one per core, and a written table is one parquet
+file that a bounded read gets through in one job. At that size the
+caller should be using a distributed plan anyway.
 """
 
 from __future__ import annotations
@@ -42,7 +45,7 @@ def local_df(
         or len(rows) > LITERAL_RELATION_MAX
         or any(v is None for r in rows for v in r)
     ):
-        return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     target = spark.createDataFrame([], schema).schema
     arr = F.array(
         *[

@@ -30,6 +30,14 @@ committed once the pointer names it, and the pointer is the only commit
 point, so readers never see a partial or uncommitted fold. Each commit
 then keeps the newest `KEEP_SNAPSHOTS` written snapshots and sweeps torn
 ones, so a store's disk use stays bounded however long the stream runs.
+
+Every fold runs through `_fold_drain`, and a fold is a `_LAYOUT` entry
+plus a `step(batch_df, snap)` that returns the tables to commit; the
+one-table folds build their step from a delta and a merge with
+`_table_step`. The skeleton holds the one exactly-once rule: every fold
+skips a batch id ≤ the committed one, so a replayed batch writes
+nothing, and a state dir is always drained under the checkpoint it
+started with.
 """
 
 from __future__ import annotations
@@ -65,7 +73,9 @@ def drain(
     exactly once, then stop: append the rows of `df` to the parquet
     table at `path`, or pass each micro-batch to `fold(batch_df,
     batch_id)`. The file-source offset log under the checkpoint is the
-    resume manifest; `fold` sees each batch at least once."""
+    resume manifest; `fold` sees each batch at least once, and
+    `_fold_drain`'s batch-id guard makes the committed state of a
+    snapshot-store fold exactly-once."""
     w = df.writeStream.option("checkpointLocation", checkpoint_dir)
     if fold is not None:
         w = w.foreachBatch(fold)
@@ -102,8 +112,9 @@ class SnapshotStore:
     file `pointer` holds the committed snapshot's name. Names embed the
     zero-padded batch id, so lexicographic order is fold order; two
     written snapshots of one batch id (a crash between write and pointer
-    commit, then replay) hold identical content by the fold's replay
-    argument, and the lexicographically last wins deterministically.
+    commit, then replay) hold identical content, since the replay folds
+    the same batch into the same committed snapshot, and the
+    lexicographically last wins deterministically.
 
     `spark` is needed only by the methods that return DataFrames."""
 
@@ -207,25 +218,27 @@ class SnapshotStore:
         return doomed
 
 
-# prefix -> (pointer file, tables); "" is a single table at the snapshot
-# root. These names are the on-disk layout every reader depends on.
-_LAYOUT = {
-    "cmap": ("CURRENT", ("",)),
-    "walk": ("CURRENT_WALK", ("paths", "edges", "seeds")),
-    "cm": ("CURRENT_CM", ("",)),
-    "hll": ("CURRENT_HLL", ("",)),
-    "bloom": ("CURRENT_BLOOM", ("",)),
-    "hist": ("CURRENT_HIST", ("",)),
-    "mix": ("CURRENT_MIX", ("",)),
-    "dedup": ("CURRENT_DEDUP", ("bands", "pairs")),
-    "tindex": ("CURRENT_TINDEX", ("tf", "dl", "dfreq", "cf", "stats")),
-    "burst": ("CURRENT_BURST", ("",)),
-}
 CMAP_SCHEMA = "entity_key string, canon string"
 
+# prefix -> (pointer file, tables, read schema); "" is a single table at
+# the snapshot root. These names are the on-disk layout every reader
+# depends on. A read schema spares each read a schema-inference job.
+_LAYOUT = {
+    "cmap": ("CURRENT", ("",), CMAP_SCHEMA),
+    "walk": ("CURRENT_WALK", ("paths", "edges", "seeds"), None),
+    "cm": ("CURRENT_CM", ("",), None),
+    "hll": ("CURRENT_HLL", ("",), None),
+    "bloom": ("CURRENT_BLOOM", ("",), None),
+    "hist": ("CURRENT_HIST", ("",), None),
+    "mix": ("CURRENT_MIX", ("",), None),
+    "dedup": ("CURRENT_DEDUP", ("bands", "pairs"), None),
+    "tindex": ("CURRENT_TINDEX", ("tf", "dl", "dfreq", "cf", "stats"), None),
+    "burst": ("CURRENT_BURST", ("",), None),
+}
 
-def _store(spark, state_dir: str, prefix: str, schema: str | None = None):
-    return SnapshotStore(spark, state_dir, prefix, *_LAYOUT[prefix], schema=schema)
+
+def _store(spark, state_dir: str, prefix: str) -> SnapshotStore:
+    return SnapshotStore(spark, state_dir, prefix, *_LAYOUT[prefix])
 
 
 def _read_table(spark: SparkSession, state_dir: str, prefix: str):
@@ -233,6 +246,63 @@ def _read_table(spark: SparkSession, state_dir: str, prefix: str):
     before the first commit."""
     snap = _store(spark, state_dir, prefix).read()
     return (snap.tables[""], snap.batch_id) if snap else (None, -1)
+
+
+def _fold_drain(
+    spark: SparkSession, landing_dir: str, state_dir: str, checkpoint_dir: str,
+    prefix: str, step, schema: str = S.TRANSCRIPT_SCHEMA,
+) -> None:
+    """Drain the landing stream (with `schema`) into the `prefix` store
+    under `state_dir`, one snapshot per folding batch: read the committed
+    snapshot once, return if the batch id is ≤ its batch id, else commit
+    the tables `step(batch_df, snap)` returns (`snap` is None before the
+    first commit; a step returning None commits nothing).
+
+    The batch-id check is the one exactly-once rule of every fold.
+    foreachBatch re-runs a batch under its old id when a crash lost the
+    offset commit: a replay of a committed batch writes nothing, and a
+    replay of an uncommitted one re-runs `step` on the same snapshot it
+    saw the first time. Batch ids count per checkpoint, so a state dir
+    is always drained under the checkpoint it started with."""
+    store = _store(spark, state_dir, prefix)
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        snap = store.read()
+        if snap is not None and batch_id <= snap.batch_id:
+            return
+        tables = step(batch_df, snap)
+        if tables is not None:
+            store.commit(batch_id, tables)
+
+    drain(read_stream(spark, landing_dir, schema), checkpoint_dir, fold=fold)
+
+
+def _table_step(delta_fn, merge_fn):
+    """The step of a one-table fold: checkpoint the batch's delta
+    `delta_fn(batch_df)`, commit nothing when it is empty, else commit
+    `merge_fn(committed table, delta)`, or the delta alone on the first
+    fold."""
+
+    def step(batch_df: DataFrame, snap: Snapshot | None):
+        delta = delta_fn(batch_df).localCheckpoint(eager=True)
+        if delta.isEmpty():
+            return None
+        return {"": delta if snap is None else merge_fn(snap.tables[""], delta)}
+
+    return step
+
+
+def _objects(batch_df: DataFrame, name: str) -> DataFrame:
+    """The batch's triple objects, as the one column `name`."""
+    return extract_triples_raw(batch_df).select(F.col("obj").alias(name))
+
+
+def _sum_cells(cur: DataFrame, delta: DataFrame, *keys: str) -> DataFrame:
+    """Two count tables merged by cell-wise sum: per `keys` group, every
+    other column of `delta` sums as a long."""
+    return cur.unionByName(delta).groupBy(*keys).agg(
+        *[F.sum(c).cast("long").alias(c) for c in delta.columns if c not in keys]
+    )
 
 
 def run_increment(
@@ -272,12 +342,12 @@ def read_canonical_map(
 
     `as_of_batch` reads the LAST snapshot whose fold batch id is ≤ the
     given id — time travel over the retained snapshot history."""
-    store = _store(spark, state_dir, "cmap", CMAP_SCHEMA)
+    store = _store(spark, state_dir, "cmap")
     snap = store.read() if as_of_batch is None else store.as_of(as_of_batch)
     return None if snap is None else snap.tables[""]
 
 
-def expire_snapshots(state_dir: str, keep_last: int = 3) -> list[str]:
+def expire_snapshots(state_dir: str, keep_last: int = KEEP_SNAPSHOTS) -> list[str]:
     """Retention GC over the canonical-map store (`SnapshotStore.expire`);
     every commit already runs it with KEEP_SNAPSHOTS. Returns the deleted
     directory names."""
@@ -295,24 +365,15 @@ def run_alias_increment(
     batch's pairs and of the map, one union-find, one snapshot write);
     above `SMALL_COMPONENT_THRESHOLD` rows the delta-bounded distributed
     recipe re-solves only the components the delta touches. A batch
-    without SAME_AS pairs commits nothing.
-
-    Exactly-once note: foreachBatch side effects are at-least-once under
-    crash-rerun (the offset commit is separate), but the fold is
-    IDEMPOTENT — merging pairs already present in the map is a no-op by
-    the merge==one-shot theorem (tested) — so at-least-once delivery
-    still converges to the exact batch answer."""
+    without SAME_AS pairs commits nothing."""
     from joern_spark.operators.canonicalize import alias_pairs, merge_canonical_map
 
-    store = _store(spark, state_dir, "cmap")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur = read_canonical_map(spark, state_dir)
+    def step(batch_df: DataFrame, snap: Snapshot | None):
+        cur = None if snap is None else snap.tables[""]
         merged = merge_canonical_map(cur, alias_pairs(batch_df))
-        if merged is not cur:  # the same object back: no SAME_AS pairs
-            store.commit(batch_id, {"": merged})
+        return None if merged is cur else {"": merged}  # same object: no pairs
 
-    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
+    _fold_drain(spark, landing_dir, state_dir, checkpoint_dir, "cmap", step)
 
 
 # ---------------------------------------------------------------------------
@@ -344,12 +405,8 @@ def run_walk_increment(
     conversations, the queries.hetero_edges_from contract), and fold it
     into the persisted keep='all' walk with hetero.incremental_paths —
     only the seeds whose cached paths touch a delta endpoint re-walk;
-    the historical path set is never replayed.
-
-    At-least-once replay is idempotent: a replayed batch's edges
-    anti-join away against the accumulated edge table, leaving an empty
-    delta, and incremental_paths with an empty delta is a pure cache
-    filter (tested)."""
+    the historical path set is never replayed. Edges already in the
+    walk anti-join away before the re-walk."""
     from joern_spark.functions.hetero import (
         asking_turns,
         expand_paths_hetero,
@@ -360,44 +417,37 @@ def run_walk_increment(
     from joern_spark.queries import hetero_edges_from
     from joern_spark.sources.transcripts import read_entities
 
-    store = _store(spark, state_dir, "walk")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, snap: Snapshot | None):
         if batch_df.isEmpty():
-            return
+            return None
         linked = link_mentions(extract_mentions(batch_df), read_entities(spark))
         delta = hetero_edges_from(batch_df, linked).dropDuplicates(
             ["src", "dst", "label"]
         ).localCheckpoint(eager=True)
         delta_seeds = asking_turns(extract_triples_raw(batch_df))
-        prev = read_walk(spark, state_dir)
-        if prev is None:
-            edges_all = delta
-            seeds_all = delta_seeds
+        if snap is None:
             paths = expand_paths_hetero(
-                seeds_all, edges_all, max_depth=max_depth,
+                delta_seeds, delta, max_depth=max_depth,
                 max_crossings=max_crossings, keep="all",
             )
-        else:
-            prev_paths, prev_edges, prev_seeds = prev
-            new_delta = delta.join(
-                prev_edges.select("src", "dst", "label"),
-                ["src", "dst", "label"],
-                "left_anti",
-            )
-            edges_all = prev_edges.unionByName(new_delta).dropDuplicates(
-                ["src", "dst", "label"]
-            )
-            seeds_all = prev_seeds.unionByName(delta_seeds).dropDuplicates()
-            paths = incremental_paths(
-                prev_paths, edges_all, new_delta, seeds_all,
-                max_depth=max_depth, max_crossings=max_crossings,
-            )
-        store.commit(
-            batch_id, {"paths": paths, "edges": edges_all, "seeds": seeds_all}
+            return {"paths": paths, "edges": delta, "seeds": delta_seeds}
+        prev = snap.tables
+        new_delta = delta.join(
+            prev["edges"].select("src", "dst", "label"),
+            ["src", "dst", "label"],
+            "left_anti",
         )
+        edges_all = prev["edges"].unionByName(new_delta).dropDuplicates(
+            ["src", "dst", "label"]
+        )
+        seeds_all = prev["seeds"].unionByName(delta_seeds).dropDuplicates()
+        paths = incremental_paths(
+            prev["paths"], edges_all, new_delta, seeds_all,
+            max_depth=max_depth, max_crossings=max_crossings,
+        )
+        return {"paths": paths, "edges": edges_all, "seeds": seeds_all}
 
-    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
+    _fold_drain(spark, landing_dir, state_dir, checkpoint_dir, "walk", step)
 
 
 # ---------------------------------------------------------------------------
@@ -419,34 +469,11 @@ def run_cm_increment(
     """Incremental heavy-hitter maintenance: drain newly-landed
     transcript files, extract triple objects, sketch the delta
     (operators/sketch.cm_sketch) and fold it into the persisted cell
-    table with cm_merge.
-
-    Exactly-once note: foreachBatch is at-least-once under crash-rerun,
-    and unlike the canonical-map fold a cell-wise SUM is NOT idempotent —
-    so the fold carries the standard batch-id guard: the committed
-    snapshot name embeds the last folded batch id, and a replayed batch
-    id ≤ that is skipped. Crash-between-write-and-pointer replays
-    rewrite the same batch's snapshot (same inputs, same cells) before
-    committing the pointer, so readers converge to the exact batch
-    answer either way."""
+    table with cm_merge."""
     from joern_spark.operators.sketch import cm_merge, cm_sketch
 
-    store = _store(spark, state_dir, "cm")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur, last_id = read_cm_sketch(spark, state_dir)
-        if batch_id <= last_id:
-            return  # replay of an already-folded batch
-        items = extract_triples_raw(batch_df).select(
-            F.col("obj").alias("item")
-        )
-        delta = cm_sketch(items).localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return
-        merged = cm_merge(cur, delta) if cur is not None else delta
-        store.commit(batch_id, {"": merged})
-
-    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
+    step = _table_step(lambda b: cm_sketch(_objects(b, "item")), cm_merge)
+    _fold_drain(spark, landing_dir, state_dir, checkpoint_dir, "cm", step)
 
 
 def read_hll_registers(spark: SparkSession, state_dir: str):
@@ -461,29 +488,11 @@ def run_hll_increment(
     """Incremental distinct-cardinality maintenance: drain newly-landed
     transcript files, register-sketch the delta's triple objects
     (operators/sketch.hll_registers) and fold into the persisted
-    register table with hll_merge.
-
-    Exactly-once note: unlike the Count-Min fold, cell-wise MAX is
-    idempotent — replaying a batch under foreachBatch's at-least-once
-    contract re-folds the same registers to the same table, so no
-    batch-id replay guard is needed for correctness; the snapshot name
-    still embeds the batch id so readers can see stream progress."""
+    register table with hll_merge."""
     from joern_spark.operators.sketch import hll_merge, hll_registers
 
-    store = _store(spark, state_dir, "hll")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur, _ = read_hll_registers(spark, state_dir)
-        items = extract_triples_raw(batch_df).select(
-            F.col("obj").alias("item")
-        )
-        delta = hll_registers(items).localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return
-        merged = hll_merge(cur, delta) if cur is not None else delta
-        store.commit(batch_id, {"": merged})
-
-    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
+    step = _table_step(lambda b: hll_registers(_objects(b, "item")), hll_merge)
+    _fold_drain(spark, landing_dir, state_dir, checkpoint_dir, "hll", step)
 
 
 def read_bloom_bits(spark: SparkSession, state_dir: str):
@@ -498,31 +507,13 @@ def run_bloom_increment(
     """Incremental join-pruning-filter maintenance: drain newly-landed
     transcript files, Bloom-sketch the delta's triple objects
     (operators/sketch.bloom_bits) and fold into the persisted bit table
-    with bloom_merge.
-
-    Exactly-once note: like the HLL max-fold (and unlike Count-Min's
-    sums), bitwise OR == union-distinct is idempotent — replaying a
-    batch re-sets the same bits, so no batch-id replay guard is needed
-    for correctness; the snapshot name still embeds the batch id so
-    readers can see stream progress. The committed table is ≤ BLOOM_M
-    rows regardless of how many batches folded into it, so the snapshot
-    write never grows with stream history."""
+    with bloom_merge. The committed table is ≤ BLOOM_M rows regardless
+    of how many batches folded into it, so the snapshot write never
+    grows with stream history."""
     from joern_spark.operators.sketch import bloom_bits, bloom_merge
 
-    store = _store(spark, state_dir, "bloom")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur, _ = read_bloom_bits(spark, state_dir)
-        keys = extract_triples_raw(batch_df).select(
-            F.col("obj").alias("key")
-        )
-        delta = bloom_bits(keys).localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return
-        merged = bloom_merge(cur, delta) if cur is not None else delta
-        store.commit(batch_id, {"": merged})
-
-    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
+    step = _table_step(lambda b: bloom_bits(_objects(b, "key")), bloom_merge)
+    _fold_drain(spark, landing_dir, state_dir, checkpoint_dir, "bloom", step)
 
 
 def read_hist_registers(spark: SparkSession, state_dir: str):
@@ -539,32 +530,17 @@ def run_hist_increment(
     (operators/sketch.hist_registers) and fold into the persisted
     bucket table with hist_merge — quantiles of the WHOLE stream so
     far are then a constant-time read-out (sketch.hist_quantiles) over
-    ≤ ~500 rows, with no replay of history.
-
-    Exactly-once note: like Count-Min (and unlike the HLL max-fold /
-    Bloom OR-fold), a cell-wise SUM is not idempotent — so the fold
-    carries the standard batch-id guard: the committed snapshot name
-    embeds the last folded batch id, and a replayed batch id ≤ that is
-    skipped."""
+    ≤ ~500 rows, with no replay of history."""
     from joern_spark.functions.hashing import tokens_col
     from joern_spark.operators.sketch import hist_merge, hist_registers
 
-    store = _store(spark, state_dir, "hist")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur, last_id = read_hist_registers(spark, state_dir)
-        if batch_id <= last_id:
-            return  # replay of an already-folded batch
-        vals = batch_df.select(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return hist_registers(batch_df.select(
             F.size(tokens_col(F.col("text"))).cast("long").alias("v")
-        )
-        delta = hist_registers(vals).localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return
-        merged = hist_merge(cur, delta) if cur is not None else delta
-        store.commit(batch_id, {"": merged})
+        ))
 
-    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
+    step = _table_step(delta, hist_merge)
+    _fold_drain(spark, landing_dir, state_dir, checkpoint_dir, "hist", step)
 
 
 def read_mix_counts(spark: SparkSession, state_dir: str):
@@ -582,47 +558,18 @@ def run_mix_increment(
     and fold it into the persisted count table by cell-wise sum — the
     mixture weights themselves are derived on read
     (curate.mixture_weights_from_counts over the committed counts), so
-    stream and batch share the exact weighting expression tree.
-
-    Exactly-once note: sums are not idempotent, so the fold carries the
-    standard batch-id guard (the committed snapshot name embeds the last
-    folded batch id; a replayed batch id ≤ that is skipped) — the same
-    discipline as the Count-Min and histogram folds."""
+    stream and batch share the exact weighting expression tree."""
     from joern_spark.functions.hashing import tokens_col
 
-    store = _store(spark, state_dir, "mix")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur, last_id = read_mix_counts(spark, state_dir)
-        if batch_id <= last_id:
-            return  # replay of an already-folded batch
-        delta = (
-            batch_df.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(
-                    F.size(tokens_col(F.col("text"))).cast("long")
-                ).alias("n_tokens"),
-            )
-            .localCheckpoint(eager=True)
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("source").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.size(tokens_col(F.col("text"))).cast("long")).alias("n_tokens"),
         )
-        if delta.isEmpty():
-            return
-        if cur is not None:
-            merged = (
-                cur.unionByName(delta)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("n_tokens").cast("long").alias("n_tokens"),
-                )
-            )
-        else:
-            merged = delta
-        store.commit(batch_id, {"": merged})
 
-    drain(
-        read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold=fold
+    step = _table_step(delta, lambda cur, d: _sum_cells(cur, d, "source"))
+    _fold_drain(
+        spark, landing_dir, state_dir, checkpoint_dir, "mix", step, DOC_STREAM_SCHEMA
     )
 
 
@@ -646,12 +593,7 @@ def run_dedup_increment(
     Exact-Jaccard verification re-reads text for ONLY the doc ids
     touched by new candidate pairs (one semi-join over the landing
     corpus — predicate pushdown keeps it a pruned scan), so the
-    corpus-sized shingle table is never persisted as state.
-
-    Exactly-once note: band rows are deterministic per doc and pairs
-    dedup on (a, b), so both folds are idempotent under at-least-once
-    replay — no batch-id guard needed (the HLL/Bloom discipline, not
-    the Count-Min one)."""
+    corpus-sized shingle table is never persisted as state."""
     from joern_spark.operators.dedup import (
         JACCARD_THRESHOLD,
         N_BANDS,
@@ -661,7 +603,6 @@ def run_dedup_increment(
         shingles,
     )
 
-    store = _store(spark, state_dir, "dedup")
     rows_per_band = N_MINHASH // N_BANDS
 
     def band_table(docs: DataFrame) -> DataFrame:
@@ -680,24 +621,20 @@ def run_dedup_increment(
             )
         )
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        old_bands, old_pairs = read_dedup_state(spark, state_dir)
+    def step(batch_df: DataFrame, snap: Snapshot | None):
         delta_docs = batch_df.select("doc_id", "text").localCheckpoint(
             eager=True
         )
         if delta_docs.isEmpty():
-            return
-        delta_bands = band_table(delta_docs).localCheckpoint(eager=True)
-        merged_bands = (
-            old_bands.unionByName(delta_bands).dropDuplicates(
+            return None
+        bands = delta_bands = band_table(delta_docs).localCheckpoint(eager=True)
+        if snap is not None:
+            bands = snap.tables["bands"].unionByName(delta_bands).dropDuplicates(
                 ["doc_id", "band"]
             )
-            if old_bands is not None
-            else delta_bands
-        )
         cand = (
             delta_bands.alias("x")
-            .join(merged_bands.alias("y"), ["band", "band_key"])
+            .join(bands.alias("y"), ["band", "band_key"])
             .where(F.col("x.doc_id") != F.col("y.doc_id"))
             .select(
                 F.least(F.col("x.doc_id"), F.col("y.doc_id")).alias("a"),
@@ -705,10 +642,6 @@ def run_dedup_increment(
             )
             .distinct()
         )
-        if old_pairs is not None:
-            cand = cand.join(
-                old_pairs.select("a", "b"), ["a", "b"], "left_anti"
-            )
         corpus = spark.read.schema(DOC_STREAM_SCHEMA).parquet(landing_dir)
         touched = cand.select(F.col("a").alias("doc_id")).unionByName(
             cand.select(F.col("b").alias("doc_id"))
@@ -718,16 +651,15 @@ def run_dedup_increment(
                 "doc_id", "text"
             )
         )
-        new_pairs = _verify_pairs(sh, cand, JACCARD_THRESHOLD)
-        merged_pairs = (
-            old_pairs.unionByName(new_pairs).dropDuplicates(["a", "b"])
-            if old_pairs is not None
-            else new_pairs
-        )
-        store.commit(batch_id, {"bands": merged_bands, "pairs": merged_pairs})
+        pairs = _verify_pairs(sh, cand, JACCARD_THRESHOLD)
+        if snap is not None:
+            pairs = snap.tables["pairs"].unionByName(pairs).dropDuplicates(
+                ["a", "b"]
+            )
+        return {"bands": bands, "pairs": pairs}
 
-    drain(
-        read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold=fold
+    _fold_drain(
+        spark, landing_dir, state_dir, checkpoint_dir, "dedup", step, DOC_STREAM_SCHEMA
     )
 
 
@@ -745,77 +677,58 @@ def run_index_increment(
 ) -> None:
     """Incremental inverted-index maintenance: drain newly-landed
     document files and fold their postings into the persisted lexical
-    index — tf/dl rows APPEND (documents are immutable), df/cf cells
-    SUM (vocabulary-bounded merge), stats re-derive from the
-    maintained (n_docs, c_tot) sums. A delta of d documents costs
-    O(d·terms) plus one vocabulary-sized merge — the corpus posting
-    table is never re-aggregated (at 10^12 docs a per-query index
-    rebuild is the difference between serving retrieval and not).
-
-    Exactly-once: the delta anti-joins the committed dl's doc ids, so
-    an at-least-once replay folds an EMPTY delta — idempotent without
-    a batch-id guard (the Bloom/HLL discipline; doc ids are the
-    natural dedup key)."""
+    index — tf/dl rows APPEND (documents are immutable, so a doc id
+    already in dl is skipped), df/cf cells SUM (vocabulary-bounded
+    merge), stats re-derive from the maintained (n_docs, c_tot) sums.
+    A delta of d documents costs O(d·terms) plus one vocabulary-sized
+    merge — the corpus posting table is never re-aggregated (at 10^12
+    docs a per-query index rebuild is the difference between serving
+    retrieval and not)."""
     from joern_spark.operators.textstats import _tf_table
 
-    store = _store(spark, state_dir, "tindex")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur = read_text_index(spark, state_dir)
+    def step(batch_df: DataFrame, snap: Snapshot | None):
         delta_docs = batch_df.select("doc_id", "text")
-        if cur is not None:
+        if snap is not None:
             delta_docs = delta_docs.join(
-                cur["dl"].select("doc_id"), "doc_id", "left_anti"
+                snap.tables["dl"].select("doc_id"), "doc_id", "left_anti"
             )
         delta_docs = delta_docs.localCheckpoint(eager=True)
         if delta_docs.isEmpty():
-            return
-        tf_d = _tf_table(delta_docs).localCheckpoint(eager=True)
-        dl_d = tf_d.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        df_d = tf_d.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        cf_d = tf_d.groupBy("tok").agg(F.sum("tf").alias("cf"))
-        if cur is not None:
-            tf_m = cur["tf"].unionByName(tf_d)
-            dl_m = cur["dl"].unionByName(dl_d)
-            df_m = (
-                cur["dfreq"].unionByName(df_d)
-                .groupBy("tok")
-                .agg(F.sum("df").alias("df"))
-            )
-            cf_m = (
-                cur["cf"].unionByName(cf_d)
-                .groupBy("tok")
-                .agg(F.sum("cf").alias("cf"))
-            )
-            st_old = cur["stats"].select("n_docs", "c_tot")
-            st_new = dl_d.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("dl").cast("long").alias("c_tot"),
-            )
-            sums = st_old.unionByName(st_new).agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("c_tot").cast("long").alias("c_tot"),
-            )
-        else:
-            tf_m, dl_m, df_m, cf_m = tf_d, dl_d, df_d, cf_d
-            sums = dl_d.agg(
+            return None
+        tf = _tf_table(delta_docs).localCheckpoint(eager=True)
+        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+        t = {
+            "tf": tf,
+            "dl": dl,
+            "dfreq": tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df")),
+            "cf": tf.groupBy("tok").agg(F.sum("tf").alias("cf")),
+            "stats": dl.agg(
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
                 F.sum("dl").cast("long").alias("c_tot"),
-            )
-        st_m = sums.select(
+            ),
+        }
+        if snap is not None:
+            cur = snap.tables
+            t = {
+                "tf": cur["tf"].unionByName(t["tf"]),
+                "dl": cur["dl"].unionByName(t["dl"]),
+                "dfreq": _sum_cells(cur["dfreq"], t["dfreq"], "tok"),
+                "cf": _sum_cells(cur["cf"], t["cf"], "tok"),
+                "stats": _sum_cells(
+                    cur["stats"].select("n_docs", "c_tot"), t["stats"]
+                ),
+            }
+        t["stats"] = t["stats"].select(
             "n_docs",
             (
                 F.col("c_tot").cast("double") / F.col("n_docs").cast("double")
             ).alias("avgdl"),
             "c_tot",
         )
-        store.commit(
-            batch_id,
-            {"tf": tf_m, "dl": dl_m, "dfreq": df_m, "cf": cf_m, "stats": st_m},
-        )
+        return t
 
-    drain(
-        read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold=fold
+    _fold_drain(
+        spark, landing_dir, state_dir, checkpoint_dir, "tindex", step, DOC_STREAM_SCHEMA
     )
 
 
@@ -861,39 +774,19 @@ def run_burst_increment(
     sum; burst hours derive ON READ via `burst_hours_from_counts` (the
     per-entity mean must see the WHOLE history, so the maintained state
     is counts, not verdicts — a burst can appear or retract as the mean
-    moves, exactly like the batch operator). Sums are not idempotent →
-    the Count-Min batch-id replay guard. State is vocabulary ×
+    moves, exactly like the batch operator). State is vocabulary ×
     corpus-hours cells — dimension-sized forever."""
     from joern_spark.operators.extract import extract_mentions
     from joern_spark.operators.link import keyed_mentions
 
-    store = _store(spark, state_dir, "burst")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur, last_id = read_burst_counts(spark, state_dir)
-        if batch_id <= last_id:
-            return  # replay of an already-folded batch
-        ts = batch_df.select("conv_id", "turn_idx", "ts")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             keyed_mentions(extract_mentions(batch_df))
             .select("conv_id", "turn_idx", "entity_key")
-            .join(ts, ["conv_id", "turn_idx"])
-            .groupBy(
-                "entity_key",
-                F.date_trunc("hour", F.col("ts")).alias("hour"),
-            )
+            .join(batch_df.select("conv_id", "turn_idx", "ts"), ["conv_id", "turn_idx"])
+            .groupBy("entity_key", F.date_trunc("hour", F.col("ts")).alias("hour"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .localCheckpoint(eager=True)
         )
-        if delta.isEmpty():
-            return
-        merged = (
-            cur.unionByName(delta)
-            .groupBy("entity_key", "hour")
-            .agg(F.sum("n").cast("long").alias("n"))
-            if cur is not None
-            else delta
-        )
-        store.commit(batch_id, {"": merged})
 
-    drain(read_stream(spark, landing_dir), checkpoint_dir, fold=fold)
+    step = _table_step(delta, lambda cur, d: _sum_cells(cur, d, "entity_key", "hour"))
+    _fold_drain(spark, landing_dir, state_dir, checkpoint_dir, "burst", step)

@@ -475,6 +475,8 @@ def test_alias_increment_above_literal_relation(spark, tmp_path_factory, monkeyp
     snap = os.path.join(state, ingest._snapshots(state)[-1])
     assert spark.read.parquet(snap).schema == spark.createDataFrame(
         [], ingest.CMAP_SCHEMA).schema
+    # the fallback map is one slice, so its snapshot is one parquet file
+    assert len([f for f in os.listdir(snap) if f.startswith("part-")]) == 1
 
 
 def test_faithfulness_stream_across_drains_and_batch_parity(
@@ -993,6 +995,107 @@ def test_burst_increment_equals_batch_bursts(spark, tmp_path_factory):
         for r in entity_bursts(corpus, extract_mentions(corpus)).collect()
     }
     assert stream_bursts == batch_bursts and batch_bursts
+
+
+def _forget_last_commit(ckpt):
+    """Delete the newest sink commit `commits/<n>` (and its `.<n>.crc`)
+    from a streaming checkpoint, as a crash after the fold's snapshot
+    commit but before Spark's batch commit leaves it: the next drain
+    re-runs batch n under the same id. Returns n."""
+    import os
+
+    commits = os.path.join(ckpt, "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(n)))
+    os.remove(os.path.join(commits, f".{n}.crc"))
+    return n
+
+
+def _cmap_state(spark, state):
+    cmap = ingest.read_canonical_map(spark, state)
+    return {r.entity_key: r.canon for r in cmap.collect()}
+
+
+def _cmap_batch(spark, landing):
+    from joern_spark.operators.canonicalize import (
+        connected_components,
+        same_as_pairs,
+    )
+
+    pairs = same_as_pairs(spark.read.parquet(landing))
+    return {r.entity_key: r.canon for r in connected_components(pairs).collect()}
+
+
+def _objects(spark, landing, name):
+    from pyspark.sql import functions as F
+
+    triples = extract_triples_raw(spark.read.parquet(landing))
+    return triples.select(F.col("obj").alias(name))
+
+
+def _cm_state(spark, state):
+    cells, _ = ingest.read_cm_sketch(spark, state)
+    return {(r.r, r.bucket): r.c for r in cells.collect()}
+
+
+def _cm_batch(spark, landing):
+    from joern_spark.operators.sketch import cm_sketch
+
+    items = _objects(spark, landing, "item")
+    return {(r.r, r.bucket): r.c for r in cm_sketch(items).collect()}
+
+
+def _bloom_state(spark, state):
+    bits, _ = ingest.read_bloom_bits(spark, state)
+    return {r.bit for r in bits.collect()}
+
+
+def _bloom_batch(spark, landing):
+    from joern_spark.operators.sketch import bloom_bits
+
+    return {r.bit for r in bloom_bits(_objects(spark, landing, "key")).collect()}
+
+
+@pytest.mark.parametrize(
+    "run, pointer, state_of, batch_answer",
+    [
+        (ingest.run_alias_increment, "CURRENT", _cmap_state, _cmap_batch),
+        (ingest.run_cm_increment, "CURRENT_CM", _cm_state, _cm_batch),
+        (ingest.run_bloom_increment, "CURRENT_BLOOM", _bloom_state, _bloom_batch),
+    ],
+    ids=["alias", "cm", "bloom"],
+)
+def test_replayed_batch_writes_nothing(
+    spark, tmp_path, run, pointer, state_of, batch_answer
+):
+    """A batch that Spark re-runs under an already-committed batch id
+    (its sink commit lost) leaves the store as it was: the same pointer,
+    no new snapshot directory, and the one-shot batch answer — for a
+    driver-solved fold (alias), a sum fold (cm) and an OR fold (bloom)."""
+    import os
+
+    landing, state, ckpt = (
+        str(tmp_path / k) for k in ("landing", "state", "ckpt")
+    )
+    os.makedirs(landing)
+    _land_rows(spark, landing, _alias_rows(
+        "zz_r1", [("Paris", "Lutetia"), ("Rome", "Urbs")]), "r1")
+    run(spark, landing, state, ckpt)
+    _land_rows(spark, landing, _alias_rows(
+        "zz_r2", [("Oslo", "Kristiania")]), "r2")
+    run(spark, landing, state, ckpt)
+    with open(os.path.join(state, pointer)) as f:
+        committed = f.read()
+    entries = sorted(os.listdir(state))
+
+    assert _forget_last_commit(ckpt) == 1
+    run(spark, landing, state, ckpt)
+
+    with open(os.path.join(state, pointer)) as f:
+        assert f.read() == committed
+    assert sorted(os.listdir(state)) == entries
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))
+    assert state_of(spark, state) == batch_answer(spark, landing)
 
 
 # --- the snapshot store, without a streaming query ---------------------------

@@ -23,10 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def edges_with_label(edges: DataFrame, label: str) -> DataFrame:
-    return edges.where(F.col("label") == label).select("src", "dst")
-
-
 def step(frontier: DataFrame, edges: DataFrame, id_col: str = "id") -> DataFrame:
     """One-hop expansion: nodes reachable from `frontier` via `edges`."""
     return (

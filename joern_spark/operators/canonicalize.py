@@ -7,11 +7,14 @@ memoized transitive closure over inheritance edges
 ("NYC is also known as New York City") form SAME_AS edges whose connected
 components must collapse to one canonical entity id.
 
-Algorithm: iterative min-label propagation over the symmetrized edge set —
-each round every node takes the min label among itself and its neighbors;
-converges in O(component diameter) rounds. Each round is one shuffle
-(groupBy node) and the frontier is `dropDuplicates`-bounded, mirroring the
-reference flow engine's task-fingerprint dedup (Engine.scala:133-143).
+Small inputs (≤ SMALL_COMPONENT_THRESHOLD pair rows, the common case: the
+pair set is bounded by the alias vocabulary) are read with one bounded
+collect and solved by a driver union-find. Larger inputs use the
+distributed algorithm: iterative min-label propagation over the
+symmetrized edge set — each round every node takes the min label among
+itself and its neighbors. Each round is one shuffle (groupBy node) and
+the frontier is `dropDuplicates`-bounded, mirroring the reference flow
+engine's task-fingerprint dedup (Engine.scala:133-143).
 `localCheckpoint` truncates the lineage every round — without it the plan
 grows exponentially (SURVEY.md §7 hard-part (a)). Each round also
 pointer-jumps labels through themselves (the large-star shortcut), so
@@ -33,10 +36,10 @@ MAX_ITERATIONS = 20
 
 # Distinct SAME_AS pairs are bounded by the alias vocabulary (not the
 # corpus): collapsing 10^12 turns still yields ~|aliases|^2 pairs at most.
-# Below this count the component solve runs driver-side (one collect +
-# union-find) instead of O(diameter) shuffle rounds — the same "memoize the
-# closure once" trade DynamicCallLinker makes with its subclass cache
-# (DynamicCallLinker.scala:31-33,94-111).
+# Up to this many pair rows the component solve runs driver-side (one
+# bounded collect + union-find) instead of O(diameter) shuffle rounds —
+# the closure is resolved in one pass, as DynamicCallLinker resolves its
+# subclass closure once per pass (DynamicCallLinker.scala:31-33,94-111).
 SMALL_COMPONENT_THRESHOLD = 100_000
 
 
@@ -113,60 +116,28 @@ def _union_find_local(edges: list[tuple[str, str]], spark) -> DataFrame:
     )
 
 
-# Session-scoped memo for the component solve. The SAME_AS closure is
-# consumed by many independent battery entries (canonical map, triple
-# rewrite, semantics rewrite, CHA linking, alias-chain / unanswered-ask
-# scanners, kind recovery); each rebuilds an identical `pairs` plan, and
-# the solve is EAGER (count + collect / iterative checkpoints), so without
-# a memo one battery run pays the alias scan ~10×. Keyed by
-# (applicationId, semanticHash(analyzed plan)) — same session + same
-# logical pairs plan ⇒ same components. This is exactly the reference's
-# subclass-cache trade (DynamicCallLinker.scala:31-33: resolve the
-# inheritance closure once, reuse for every call site). Bounded; cleared
-# wholesale when full (entries are tiny: the label DF handle only).
-_CC_MEMO: dict[tuple[str, int], DataFrame] = {}
-_CC_MEMO_MAX = 32
-
-
-def _cc_memo_key(pairs: DataFrame):
-    try:
-        h = pairs._jdf.queryExecution().analyzed().semanticHash()
-        app = pairs.sparkSession.sparkContext.applicationId
-        # The semantic hash covers the LOGICAL plan only — re-reading a
-        # directory that has since gained files produces the same hash,
-        # so a session watching a growing landing dir would get stale
-        # components. Fold the resolved file listing into the key (one
-        # driver-side listing, negligible next to the eager solve).
-        files = hash(tuple(sorted(pairs.inputFiles())))
-        return (app, h, files)
-    except Exception:  # Connect / future API drift — just skip the memo
-        return None
+def _bounded_rows(df: DataFrame, *cols: str) -> list[tuple]:
+    """At most SMALL_COMPONENT_THRESHOLD + 1 rows of `cols`, one bounded
+    collect: a result longer than the threshold means "too big for the
+    driver" without pulling the whole input."""
+    cap = SMALL_COMPONENT_THRESHOLD + 1
+    return [tuple(r) for r in df.select(*cols).limit(cap).collect()]
 
 
 def connected_components(pairs: DataFrame) -> DataFrame:
     """canonical_map(entity_key, canon) for every key in `pairs`;
     canon = min key of the connected component. Nodes not in any pair are
     absent (identity mapping is applied by the caller via coalesce).
-    Memoized per (session, analyzed-plan hash) — see _CC_MEMO above."""
-    key = _cc_memo_key(pairs)
-    if key is not None and key in _CC_MEMO:
-        return _CC_MEMO[key]
-    out = _connected_components_uncached(pairs)
-    if key is not None:
-        if len(_CC_MEMO) >= _CC_MEMO_MAX:
-            _CC_MEMO.clear()
-        _CC_MEMO[key] = out
-    return out
-
-
-def _connected_components_uncached(pairs: DataFrame) -> DataFrame:
-    sym = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.dropDuplicates().persist()
-    if sym.count() <= SMALL_COMPONENT_THRESHOLD:
-        edges = [(r["a"], r["b"]) for r in sym.collect()]
-        sym.unpersist()
+    `pairs` may repeat a pair. Up to SMALL_COMPONENT_THRESHOLD pair rows
+    are read with one bounded collect and solved by the driver
+    union-find; larger inputs run the distributed min-label loop. Every
+    call solves: a caller that reuses a map holds on to it."""
+    edges = _bounded_rows(pairs, "a", "b")
+    if len(edges) <= SMALL_COMPONENT_THRESHOLD:
         return _union_find_local(edges, pairs.sparkSession)
-    sym = sym.localCheckpoint(eager=True)
+    sym = pairs.select("a", "b")
+    sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = sym.dropDuplicates().localCheckpoint(eager=True)
     # label(n) starts as min(n, min neighbor) and contracts each round
     labels = (
         sym.groupBy("a")
@@ -300,15 +271,13 @@ def merge_canonical_map(
     small (broadcast below functions/joins.MAP_BROADCAST_THRESHOLD rows;
     plain shuffle join above — same thresholding as dedup_survivors);
     the reduced component solve is delta-bounded."""
-    cap = SMALL_COMPONENT_THRESHOLD + 1
-    delta = [tuple(r) for r in new_pairs.select("a", "b").limit(cap).collect()]
+    delta = _bounded_rows(new_pairs, "a", "b")
     if not delta:
         return existing
     if len(delta) <= SMALL_COMPONENT_THRESHOLD:
-        old = [] if existing is None else [
-            tuple(r)
-            for r in existing.select("entity_key", "canon").limit(cap).collect()
-        ]
+        old = [] if existing is None else _bounded_rows(
+            existing, "entity_key", "canon"
+        )
         if len(old) + len(delta) <= SMALL_COMPONENT_THRESHOLD:
             return _union_find_local(old + delta, new_pairs.sparkSession)
     if existing is None:

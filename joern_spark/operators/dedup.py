@@ -193,20 +193,16 @@ def minhash_signatures(documents: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """MinHash banding → candidate pairs → exact-Jaccard verification.
-
-    Bands of N_MINHASH/N_BANDS rows: two docs collide iff one band's
-    signature slice matches exactly — the classic LSH S-curve. Candidates
-    are then verified, so output precision is exact; recall is the LSH
-    approximation (pairs sharing no band are missed — by design, that is
-    what makes it scale: no all-pairs term anywhere)."""
+def minhash_bands(documents: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key): the MinHash signature cut into N_BANDS
+    bands of N_MINHASH/N_BANDS rows; band_key joins a band's signatures,
+    in row order, with '_'. Two documents are LSH candidates iff they
+    share a (band, band_key). The batch pairs and the streaming dedup
+    fold both band through here, so stream equals batch."""
     rows_per_band = N_MINHASH // N_BANDS
-    sig = minhash_signatures(documents)
-    bands = (
-        sig.withColumn("band", (F.col("i") / rows_per_band).cast("int"))
+    return (
+        minhash_signatures(documents)
+        .withColumn("band", (F.col("i") / rows_per_band).cast("int"))
         .groupBy("doc_id", "band")
         .agg(
             F.array_join(
@@ -218,6 +214,19 @@ def minhash_lsh_pairs(
             ).alias("band_key")
         )
     )
+
+
+def minhash_lsh_pairs(
+    documents: DataFrame, threshold: float = JACCARD_THRESHOLD
+) -> DataFrame:
+    """MinHash banding → candidate pairs → exact-Jaccard verification.
+
+    Bands of N_MINHASH/N_BANDS rows: two docs collide iff one band's
+    signature slice matches exactly — the classic LSH S-curve. Candidates
+    are then verified, so output precision is exact; recall is the LSH
+    approximation (pairs sharing no band are missed — by design, that is
+    what makes it scale: no all-pairs term anywhere)."""
+    bands = minhash_bands(documents)
     cand = (
         bands.alias("x")
         .join(bands.alias("y"), ["band", "band_key"])

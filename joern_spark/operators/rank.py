@@ -134,7 +134,7 @@ def pagerank(
     """(node, rank) after `iterations` damped rounds over the symmetric
     edge set. Co-mention graphs are vocabulary-bounded, so below
     PR_LOCAL_THRESHOLD edges the solve runs on the driver (the
-    memoized-closure trade canonicalize makes for union-find); above it,
+    trade canonicalize makes for its union-find); above it,
     the distributed join loop with per-round localCheckpoint lineage
     truncation. Both paths produce bit-identical ranks (tested)."""
     sym = (
@@ -191,11 +191,11 @@ def entity_communities(edges: DataFrame) -> DataFrame:
 
     The graph-community analog of the reference's inheritance-closure
     grouping (DynamicCallLinker's subclass cache groups types the same
-    way): reuses `canonicalize.connected_components` — memoized
-    union-find fast path under the threshold, iterative label
-    propagation above — so the solve inherits both the scale shape and
-    the session memo. Edge filtering happens BEFORE the solve; the
-    component map is vocabulary-bounded, so the size join broadcasts."""
+    way): reuses `canonicalize.connected_components` — driver
+    union-find under the threshold, iterative label propagation
+    above — so the solve inherits its scale shape. Edge filtering
+    happens BEFORE the solve; the component map is vocabulary-bounded,
+    so the size join broadcasts."""
     from joern_spark.operators.canonicalize import connected_components
 
     strong = edges.where(F.col("n_convs") >= COMMUNITY_MIN_CONVS).select(

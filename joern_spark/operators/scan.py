@@ -298,12 +298,9 @@ def scan_alias_chains(transcripts: DataFrame) -> DataFrame:
     Big Apple → NYC → New York City that force multi-hop resolution
     (the DynamicCallLinker subclass-closure smell). Evidence = the
     component's canonical key, scored by component size."""
-    from joern_spark.operators.canonicalize import (
-        connected_components,
-        same_as_pairs,
-    )
+    from joern_spark.operators.canonicalize import alias_pairs, connected_components
 
-    cmap = connected_components(same_as_pairs(transcripts))
+    cmap = connected_components(alias_pairs(transcripts))
     return (
         cmap.groupBy("canon")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -936,17 +933,13 @@ def scan_globally_unanswered_asks(
     canonical map (asking about NYC is answered by a New York City
     result). Distinct from unanswered-ask (intra-conversation ordering).
     The canonical map is vocabulary-bounded — both rewrites broadcast."""
-    from joern_spark.operators.canonicalize import (
-        connected_components,
-        same_as_pairs,
-    )
+    from joern_spark.operators.canonicalize import alias_pairs, connected_components
 
     s = _slices(transcripts, slices)
-    # cmap goes through canonicalize's OWN pair plan (not slices.alias):
-    # connected_components memoizes the solve per session on that plan,
-    # so this shares one solve with alias-chain / tpg_canonical_map —
-    # rebuilding from the slice would fork a second solve per battery.
-    cmap = F.broadcast(connected_components(same_as_pairs(transcripts)))
+    # This scanner solves its own SAME_AS map once per findings build
+    # (one bounded read of the alias pairs + a driver union-find, as
+    # scan_alias_chains does).
+    cmap = F.broadcast(connected_components(alias_pairs(transcripts)))
 
     def canon(df):
         # slice `loc` is already blocking-normalized (idempotent norm)

@@ -44,8 +44,10 @@ class GraphResult:
 
 
 def canonical_map(transcripts: DataFrame) -> DataFrame:
-    """S4: (entity_key, canon) over the SAME_AS alias components."""
-    return canonicalize.connected_components(canonicalize.same_as_pairs(transcripts))
+    """S4: (entity_key, canon) over the SAME_AS alias components. The
+    solve reads the raw alias pairs (`alias_pairs`, no dedup shuffle) —
+    the union-find absorbs repeats, as in the ingest fold."""
+    return canonicalize.connected_components(canonicalize.alias_pairs(transcripts))
 
 
 def canonical_triples(

@@ -4,6 +4,7 @@ matching the DuckDB oracle in joern_spark.oracle."""
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -26,6 +27,46 @@ from joern_spark.sources.transcripts import read_entities, read_transcripts
 
 def _t(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_transcripts(spark, G.sf_from_dir(sf_dir))
+
+
+# The one memo of the query pack: a derived table that SEVERAL registered
+# queries consume (the SAME_AS map, the mention layer, the co-mention
+# edges, the hetero walk, the findings battery, ...) is built once per
+# (table, session, corpus) and lazily checkpointed, and every consumer
+# reads the materialized table. Only the battery memoizes: it runs every
+# registered query over one immutable corpus in one session, so each
+# shared layer is paid once. Build (`job.run_job`), serve (`Workspace`)
+# and ingest hold or commit their own layers and solve per call, so no
+# state survives from one of their runs into the next.
+_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def _per_corpus(
+    build: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Memoize `build(spark, sf_dir)` under (build's function name,
+    applicationId, sf_dir). Contract: sf_dir is an IMMUTABLE corpus
+    directory (the generated per-sf snapshots) — the key does not watch
+    the file listing, so a source that grows mid-session (a streaming
+    landing dir) must not go through it."""
+
+    @functools.wraps(build)
+    def memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
+        key = (build.__name__, spark.sparkContext.applicationId, sf_dir)
+        df = _MEMO.get(key)
+        if df is None:
+            df = _MEMO[key] = build(spark, sf_dir).localCheckpoint(eager=False)
+        return df
+
+    return memoized
+
+
+@_per_corpus
+def _canonical_map(spark, sf_dir):
+    """The SAME_AS component map: five registered queries rewrite
+    through it (canonical map, final and semantics triples, kind
+    recovery, CHA linking), so the battery solves it once."""
+    return pipeline.canonical_map(_t(spark, sf_dir))
 
 
 def q_turns(spark, sf_dir):
@@ -75,7 +116,7 @@ def q_stub_entities(spark, sf_dir):
 
 
 def q_canonical_map(spark, sf_dir):
-    return pipeline.canonical_map(_t(spark, sf_dir))
+    return _canonical_map(spark, sf_dir)
 
 
 def q_rebind_current_db(spark, sf_dir):
@@ -83,11 +124,8 @@ def q_rebind_current_db(spark, sf_dir):
 
 
 # The reaching-defs table feeds two registered queries
-# (tpg_reaching_defs and the tpg_ddg_slice closure over it) — memoized
-# per (session, sf_dir) like the other shared layers.
-_REACHING_CACHE: dict = {}
-
-
+# (tpg_reaching_defs and the tpg_ddg_slice closure over it).
+@_per_corpus
 def q_reaching_defs(spark, sf_dir):
     """General gen/kill reaching definitions over the NEXT_TURN CFG with
     rebind turns as definitions of variable 'db'. The corpus is linear,
@@ -99,30 +137,25 @@ def q_reaching_defs(spark, sf_dir):
 
     from joern_spark.operators.dataflow import reaching_definitions
 
-    def build():
-        t = _t(spark, sf_dir)
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        edges = (
-            t.select(
-                "conv_id", "turn_idx", F.lead("turn_idx").over(w).alias("next_idx")
-            )
-            .where(F.col("next_idx").isNotNull())
-            .select(
-                "conv_id",
-                F.col("turn_idx").alias("src_idx"),
-                F.col("next_idx").alias("dst_idx"),
-            )
+    t = _t(spark, sf_dir)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    edges = (
+        t.select(
+            "conv_id", "turn_idx", F.lead("turn_idx").over(w).alias("next_idx")
         )
-        r = RULES_BY_NAME["rebind"]
-        cond = F.col("text").rlike(r.pattern)
-        if r.role:
-            cond = (F.col("role") == r.role) & cond
-        defs = t.where(cond).select(
-            "conv_id", "turn_idx", F.lit("db").alias("var")
+        .where(F.col("next_idx").isNotNull())
+        .select(
+            "conv_id",
+            F.col("turn_idx").alias("src_idx"),
+            F.col("next_idx").alias("dst_idx"),
         )
-        return reaching_definitions(edges, defs)
-
-    return _session_memo(_REACHING_CACHE, spark, sf_dir, build)
+    )
+    r = RULES_BY_NAME["rebind"]
+    cond = F.col("text").rlike(r.pattern)
+    if r.role:
+        cond = (F.col("role") == r.role) & cond
+    defs = t.where(cond).select("conv_id", "turn_idx", F.lit("db").alias("var"))
+    return reaching_definitions(edges, defs)
 
 
 def q_dbcur_general(spark, sf_dir):
@@ -359,7 +392,9 @@ def q_triples_final(spark, sf_dir):
     costs far more than the selective re-scan and halved 8-core
     throughput at sf3."""
     t = _t(spark, sf_dir)
-    return pipeline.triples_final(t, extract_triples_raw(t), pipeline.canonical_map(t))
+    return pipeline.triples_final(
+        t, extract_triples_raw(t), _canonical_map(spark, sf_dir)
+    )
 
 
 def q_triples_semantics(spark, sf_dir):
@@ -377,7 +412,7 @@ def q_triples_semantics(spark, sf_dir):
     )
 
     t = _t(spark, sf_dir)
-    cmap = pipeline.canonical_map(t)
+    cmap = _canonical_map(spark, sf_dir)
     raw = extract_triples_raw(t)
     dyn = rebind.dbcur_triples(t)
     sem = semantics_df(spark, current_semantics())
@@ -391,44 +426,15 @@ def q_sessions(spark, sf_dir):
     return assemble.session_ids(_t(spark, sf_dir))
 
 
-# Session-scoped result memo: expensive derived tables that MULTIPLE
-# registered queries consume (each cached result is tiny — bounded by
-# vocabulary / seeds / scanner hits, never corpus-sized) are built once
-# per (applicationId, sf_dir) and lazily checkpointed; every consumer
-# reads the materialized table. One helper so the caching discipline
-# (key shape, checkpoint mode) lives in one place.
-def _session_memo(
-    cache: dict, spark, sf_dir: str, build: Callable[[], DataFrame]
-) -> DataFrame:
-    # Contract: sf_dir is an IMMUTABLE corpus directory (the generated
-    # per-sf snapshots) — this key deliberately does not watch the file
-    # listing. A source that grows mid-session (a streaming landing dir)
-    # must NOT go through this memo; see canonicalize._cc_memo_key for
-    # the listing-aware variant that guards the component solve.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = cache.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=False)
-        cache[key] = df
-    return df
-
-
 # The co-mention edge table: vocabulary-bounded (≤ |vocab|² rows) but a
 # full extraction scan + distinct + self-join to derive (~3-4 s each at
 # sf0.1); four graph-analytics operators (PageRank, triangles,
 # communities, k-core) read it.
-_COOC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_corpus
 def _comention_edges(spark, sf_dir):
     from joern_spark.operators.rank import entity_cooccurrence
 
-    return _session_memo(
-        _COOC_CACHE,
-        spark,
-        sf_dir,
-        lambda: entity_cooccurrence(_mentions(spark, sf_dir)),
-    )
+    return entity_cooccurrence(_mentions(spark, sf_dir))
 
 
 # The mention table — ONE regex-extraction scan of the corpus — and its
@@ -436,27 +442,18 @@ def _comention_edges(spark, sf_dir):
 # CHA, kind recovery, degree, slices, vectors, the hetero edge union).
 # Re-running the extraction per consumer re-scans the corpus each time;
 # the memo materializes it once per (session, sf_dir). Unlike the other
-# memos this one is corpus-WIDTH (one row per mention, ~1.8 rows/turn)
-# — at cluster scale this is the standard "persist the extraction
-# layer" materialization every multi-query session does, not a
-# broadcast; locally it is a localCheckpoint.
-_MENTIONS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LINKED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# memoized tables this one is corpus-WIDTH (one row per mention, ~1.8
+# rows/turn) — at cluster scale this is the standard "persist the
+# extraction layer" materialization every multi-query session does, not
+# a broadcast; locally it is a localCheckpoint.
+@_per_corpus
 def _mentions(spark, sf_dir):
-    return _session_memo(
-        _MENTIONS_CACHE, spark, sf_dir, lambda: extract_mentions(_t(spark, sf_dir))
-    )
+    return extract_mentions(_t(spark, sf_dir))
 
 
+@_per_corpus
 def _linked(spark, sf_dir):
-    return _session_memo(
-        _LINKED_CACHE,
-        spark,
-        sf_dir,
-        lambda: link.link_mentions(_mentions(spark, sf_dir), read_entities(spark)),
-    )
+    return link.link_mentions(_mentions(spark, sf_dir), read_entities(spark))
 
 
 def q_entity_rank(spark, sf_dir):
@@ -744,9 +741,7 @@ def q_kind_recovery(spark, sf_dir):
     tested)."""
     from joern_spark.operators.recover import recover_kinds
 
-    t = _t(spark, sf_dir)
-    cmap = pipeline.canonical_map(t)
-    return recover_kinds(_mentions(spark, sf_dir), cmap)
+    return recover_kinds(_mentions(spark, sf_dir), _canonical_map(spark, sf_dir))
 
 
 def q_tool_stats(spark, sf_dir):
@@ -835,43 +830,32 @@ def _hetero_edges(spark, sf_dir):
 # seeds × fan, ~1% of corpus rows, not a corpus-sized intermediate);
 # tpg_cross_paths derives keep='max' from it with one aggregation, so the
 # battery walks the graph ONCE for all seven consumers.
-_PATHS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 # The hetero STEP TABLE (per-label deduped + fan-capped edge slices) is
 # the graph every walk joins against — the battery runs two walks with
 # different depth/nesting budgets (the shared depth-4 walk and the
 # two-frame tpg_cross_paths_nested), so the table is memoized once per
 # (session, sf_dir) and passed into both.
-_STEPS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_corpus
 def _hetero_steps(spark, sf_dir):
     from joern_spark.functions.hetero import step_edges
 
-    return _session_memo(
-        _STEPS_CACHE,
-        spark,
-        sf_dir,
-        lambda: step_edges(_hetero_edges(spark, sf_dir)),
-    )
+    return step_edges(_hetero_edges(spark, sf_dir))
 
 
+@_per_corpus
 def _all_paths(spark, sf_dir):
     from joern_spark.functions.hetero import asking_turns, expand_paths_hetero
 
-    def build():
-        t = _t(spark, sf_dir)
-        seeds = asking_turns(extract_triples_raw(t))
-        return expand_paths_hetero(
-            seeds,
-            _hetero_edges(spark, sf_dir),
-            max_depth=4,
-            max_crossings=2,
-            keep="all",
-            steps=_hetero_steps(spark, sf_dir),
-        )
-
-    return _session_memo(_PATHS_CACHE, spark, sf_dir, build)
+    seeds = asking_turns(extract_triples_raw(_t(spark, sf_dir)))
+    return expand_paths_hetero(
+        seeds,
+        _hetero_edges(spark, sf_dir),
+        max_depth=4,
+        max_crossings=2,
+        keep="all",
+        steps=_hetero_steps(spark, sf_dir),
+    )
 
 
 def _cross_paths(spark, sf_dir):
@@ -1098,21 +1082,14 @@ def q_entity_degree(spark, sf_dir):
 # about), so within one driver process it is computed once per
 # (session, sf_dir) and checkpointed; tpg_tagged_by then costs one
 # projection instead of a full battery re-run (23s → <2s at sf0.1).
-_FINDINGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_corpus
 def _findings(spark, sf_dir):
     # the flow scanners reuse the session's cached keep='all' walk — the
     # battery pays one heterogeneous walk for cross_paths/flows/findings
-    return _session_memo(
-        _FINDINGS_CACHE,
-        spark,
-        sf_dir,
-        lambda: scan.run_scan(
-            _t(spark, sf_dir),
-            read_entities(spark),
-            flow_paths=_all_paths(spark, sf_dir),
-        ),
+    return scan.run_scan(
+        _t(spark, sf_dir),
+        read_entities(spark),
+        flow_paths=_all_paths(spark, sf_dir),
     )
 
 
@@ -1128,9 +1105,9 @@ def q_tool_pairs(spark, sf_dir):
 def q_linked_multi(spark, sf_dir):
     """CHA-style multi-candidate entity resolution: one mention row per
     alias-component candidate, internal-preferred."""
-    t = _t(spark, sf_dir)
-    cmap = pipeline.canonical_map(t)
-    return link.link_mentions_cha(_mentions(spark, sf_dir), read_entities(spark), cmap)
+    return link.link_mentions_cha(
+        _mentions(spark, sf_dir), read_entities(spark), _canonical_map(spark, sf_dir)
+    )
 
 
 SLICE_SEEDS = ["big_apple"]
@@ -1404,37 +1381,25 @@ def q_doc_keywords(spark, sf_dir):
 # once per ranker (the co-mention-edge discipline). The memoized frame
 # is the per-query TOP-K table (dimension-sized) — checkpointing it
 # truncates the whole retrieval lineage.
-_BM25_CACHE: dict[tuple[str, str], DataFrame] = {}
-_QLD_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_corpus
 def _bm25_ranked(spark, sf_dir):
     from joern_spark.functions.localrel import local_df
     from joern_spark.operators.textstats import BM25_QUERIES
 
-    return _session_memo(
-        _BM25_CACHE,
-        spark,
-        sf_dir,
-        lambda: textstats.bm25_topk(
-            read_documents(spark, sf_dir),
-            local_df(spark, BM25_QUERIES, "query_id string, qtext string"),
-        ),
+    return textstats.bm25_topk(
+        read_documents(spark, sf_dir),
+        local_df(spark, BM25_QUERIES, "query_id string, qtext string"),
     )
 
 
+@_per_corpus
 def _qld_ranked(spark, sf_dir):
     from joern_spark.functions.localrel import local_df
     from joern_spark.operators.textstats import BM25_QUERIES
 
-    return _session_memo(
-        _QLD_CACHE,
-        spark,
-        sf_dir,
-        lambda: textstats.qld_topk(
-            read_documents(spark, sf_dir),
-            local_df(spark, BM25_QUERIES, "query_id string, qtext string"),
-        ),
+    return textstats.qld_topk(
+        read_documents(spark, sf_dir),
+        local_df(spark, BM25_QUERIES, "query_id string, qtext string"),
     )
 
 

@@ -1769,8 +1769,3 @@ def bundles() -> dict[str, list[Query]]:
         b: [by_name[n] for n in names if n in by_name]
         for b, names in BUNDLES.items()
     }
-
-
-def query_report(spark: SparkSession) -> list[dict]:
-    """Verify the whole database against its own examples."""
-    return [verify_examples(spark, q) for q in QUERY_DB]

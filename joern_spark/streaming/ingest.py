@@ -596,30 +596,10 @@ def run_dedup_increment(
     corpus-sized shingle table is never persisted as state."""
     from joern_spark.operators.dedup import (
         JACCARD_THRESHOLD,
-        N_BANDS,
-        N_MINHASH,
         _verify_pairs,
-        minhash_signatures,
+        minhash_bands,
         shingles,
     )
-
-    rows_per_band = N_MINHASH // N_BANDS
-
-    def band_table(docs: DataFrame) -> DataFrame:
-        sig = minhash_signatures(docs)
-        return (
-            sig.withColumn("band", (F.col("i") / rows_per_band).cast("int"))
-            .groupBy("doc_id", "band")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("i", "sig"))),
-                        lambda x: x["sig"].cast("string"),
-                    ),
-                    "_",
-                ).alias("band_key")
-            )
-        )
 
     def step(batch_df: DataFrame, snap: Snapshot | None):
         delta_docs = batch_df.select("doc_id", "text").localCheckpoint(
@@ -627,7 +607,7 @@ def run_dedup_increment(
         )
         if delta_docs.isEmpty():
             return None
-        bands = delta_bands = band_table(delta_docs).localCheckpoint(eager=True)
+        bands = delta_bands = minhash_bands(delta_docs).localCheckpoint(eager=True)
         if snap is not None:
             bands = snap.tables["bands"].unionByName(delta_bands).dropDuplicates(
                 ["doc_id", "band"]

@@ -29,9 +29,10 @@ into any identical plan in the session, so the `tpg_*`/`{name}_*` views
 and the lazy layers built on the held ones (`edges`) read it too.
 `close`, `delete` and a re-import under the same name unpersist them.
 
-Scale note: `open` persists nothing. Opening a project costs nothing
-until a layer is touched, and a project that is opened but never
-queried holds no data.
+Scale note: `open` persists nothing. Planning the graph runs one Spark
+step eagerly, the S4 component solve (a bounded read of the alias pairs
+and a driver union-find); every other layer costs nothing until it is
+touched, and a project that is opened but never queried holds no data.
 """
 
 from __future__ import annotations
@@ -94,6 +95,7 @@ class Project:
     sf_dir: str | float
     _graph: GraphResult | None = field(default=None, repr=False)
     _held: bool = field(default=False, init=False, repr=False)
+    _edge_fp: str | None = field(default=None, init=False, repr=False)
     _lock: threading.RLock = field(
         default_factory=threading.RLock, init=False, repr=False, compare=False
     )
@@ -125,6 +127,23 @@ class Project:
                 self._held = True
             return g
 
+    def edge_fingerprint(self, spark: SparkSession) -> str:
+        """"count:xor" over the held graph's edge table — the row count
+        and an order-insensitive bit_xor of row hashes (one scan, no
+        overflow, ANSI-safe). Computed on first use and kept until
+        `release` drops the graph, so repeated flow requests on a held
+        project do not rescan the edges."""
+        with self._lock:
+            if self._edge_fp is None:
+                row = self.hold(spark).edges.select(
+                    F.count(F.lit(1)).alias("n"),
+                    F.bit_xor(
+                        md5_long(F.concat_ws("|", "src", "dst", "label"))
+                    ).alias("x"),
+                ).collect()[0]
+                self._edge_fp = f"{row['n']}:{row['x']}"
+            return self._edge_fp
+
     def release(self) -> None:
         """Unpersist the held layers and drop the graph; the next access
         replans lazily. Most-derived layer first, so no still-held
@@ -133,7 +152,7 @@ class Project:
             if self._held:
                 for layer in reversed(HELD_LAYERS):
                     getattr(self._graph, layer).unpersist()
-            self._graph, self._held = None, False
+            self._graph, self._held, self._edge_fp = None, False, None
 
 
 class Workspace:
@@ -271,7 +290,9 @@ class Workspace:
         max_nesting: int = FLOW_NESTING,
     ) -> str:
         """Cache key of the active project's walk at these budgets."""
-        return _walk_key(self.cpg, max_depth, max_crossings, max_nesting)
+        return _walk_key(
+            self.project(), self.spark, max_depth, max_crossings, max_nesting
+        )
 
     def cached_walk(
         self,
@@ -284,13 +305,14 @@ class Workspace:
         workspace flow cache when the key matches, else computed once,
         written, and recorded in the manifest. Without a manifest path
         the walk is computed uncached (a scratch workspace)."""
-        return self._cached_walk(self.cpg, max_depth, max_crossings, max_nesting)
+        return self._cached_walk(self.project(), max_depth, max_crossings, max_nesting)
 
-    def _cached_walk(self, g: GraphResult, *budgets: int) -> tuple[DataFrame, bool]:
+    def _cached_walk(self, p: Project, *budgets: int) -> tuple[DataFrame, bool]:
+        g = p.hold(self.spark)
         if self.path is None:
             return _walk(g, *budgets), False
         root = self.path.parent / f"{self.path.stem}_flowcache"
-        key = _walk_key(g, *budgets)
+        key = _walk_key(p, self.spark, *budgets)
         cache_dir = root / key
         hit = (cache_dir / "_SUCCESS").exists()
         if not hit:
@@ -328,7 +350,8 @@ class Workspace:
         probe), the result derives from the cached walk with three
         semi-joins; otherwise, or without a manifest path to cache
         under, it is a fresh regex-seeded walk (console.flows)."""
-        g = self.cpg
+        p = self.project()
+        g = p.hold(self.spark)
         budgets = (max_depth, max_crossings, max_nesting)
         if self.path is not None:
             wanted = g.transcripts.where(F.col("text").rlike(src_pattern))
@@ -336,7 +359,7 @@ class Workspace:
                 asking_turns(g.triples_raw), "id", "left_anti"
             )
             if uncovered.limit(1).count() == 0:
-                paths, _ = self._cached_walk(g, *budgets)
+                paths, _ = self._cached_walk(p, *budgets)
                 return console.flow_rows(
                     named_flows(
                         g.transcripts,
@@ -387,14 +410,9 @@ def _walk(
     )
 
 
-def _walk_key(g: GraphResult, *budgets: int) -> str:
-    """Cache key: md5 over the edge-table fingerprint (count +
-    order-insensitive bit_xor of row hashes — one scan, no overflow,
-    ANSI-safe) and the walk budgets. A corpus or semantics change flips
-    the fingerprint and misses cleanly."""
-    row = g.edges.select(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(md5_long(F.concat_ws("|", "src", "dst", "label"))).alias("x"),
-    ).collect()[0]
-    raw = ":".join(str(v) for v in (row["n"], row["x"], *budgets))
+def _walk_key(p: Project, spark: SparkSession, *budgets: int) -> str:
+    """Cache key: md5 over the project's edge fingerprint and the walk
+    budgets. A corpus or semantics change flips the fingerprint and
+    misses cleanly."""
+    raw = ":".join([p.edge_fingerprint(spark), *map(str, budgets)])
     return hashlib.md5(raw.encode()).hexdigest()[:16]

@@ -28,11 +28,62 @@ def as_map(df):
 
 def force_distributed(monkeypatch):
     """Route every component solve and map merge through the distributed
-    recipe, with a fresh memo so no driver-solved result is reused."""
+    recipe."""
     from joern_spark.operators import canonicalize as C
 
     monkeypatch.setattr(C, "SMALL_COMPONENT_THRESHOLD", 0)
-    monkeypatch.setattr(C, "_CC_MEMO", {})
+
+
+def count_union_finds(monkeypatch) -> list:
+    """Record every driver union-find `canonicalize` runs."""
+    from joern_spark.operators import canonicalize as C
+
+    calls = []
+    real = C._union_find_rows
+    monkeypatch.setattr(
+        C, "_union_find_rows", lambda edges: calls.append(1) or real(edges)
+    )
+    return calls
+
+
+def test_canonical_map_solves_per_call(spark, make_transcripts, monkeypatch):
+    """The S4 solve keeps no hidden state: two `pipeline.canonical_map`
+    calls on one frame run the union-find twice and give one answer. The
+    raw alias pairs repeat a pair (two NYC turns); the map has one row
+    per key."""
+    from joern_spark import pipeline
+
+    calls = count_union_finds(monkeypatch)
+    t = make_transcripts(
+        [
+            ("c1", 0, "user", "Note that NYC is also known as New York City.", None),
+            ("c1", 1, "user", "Note that Big Apple is also known as NYC.", None),
+            ("c2", 0, "user", "Note that NYC is also known as New York City.", None),
+        ]
+    )
+    first = pipeline.canonical_map(t)
+    second = pipeline.canonical_map(t)
+    assert len(calls) == 2
+    assert first.count() == 3
+    assert as_map(first) == as_map(second) == {
+        "big_apple": "big_apple", "nyc": "big_apple", "new_york_city": "big_apple",
+    }
+
+
+def test_query_battery_solves_canonical_map_once(spark, monkeypatch):
+    """The battery's per-corpus memo: the canonical-map, final-triples
+    and kind-recovery queries on one corpus solve the SAME_AS components
+    once in total."""
+    from joern_spark import queries as Q
+
+    monkeypatch.setattr(Q, "_MEMO", {})
+    calls = count_union_finds(monkeypatch)
+    sf_dir = "sf0.001"
+    cmap = Q.q_canonical_map(spark, sf_dir)
+    Q.q_triples_final(spark, sf_dir)
+    Q.q_kind_recovery(spark, sf_dir)
+    assert cmap.count() > 0
+    assert len(calls) == 1
 
 
 def test_cc_chain(spark):

@@ -316,10 +316,7 @@ def test_merge_canonical_map_matches_oneshot(spark, pairs, split):
     }
     assert merged == oneshot, (b1, b2)
     if b2:
-        with (
-            mock.patch.object(C, "SMALL_COMPONENT_THRESHOLD", 0),
-            mock.patch.object(C, "_CC_MEMO", {}),
-        ):
+        with mock.patch.object(C, "SMALL_COMPONENT_THRESHOLD", 0):
             distributed = {
                 r["entity_key"]: r["canon"]
                 for r in merge_canonical_map(

@@ -406,6 +406,27 @@ def test_flow_walk_cache_across_sessions(spark, tmp_path, new_workspace):
     assert "cachep" in listed
 
 
+def test_edge_fingerprint_once_per_held_project(spark, new_workspace, monkeypatch):
+    """The walk key's edge fingerprint — a full aggregation over `edges`
+    — runs once per held project: a second flow request on the same
+    held project reuses it, and `release` drops it."""
+    from joern_spark import workspace as W
+
+    calls = []
+    real = W.md5_long
+    monkeypatch.setattr(W, "md5_long", lambda c: calls.append(c) or real(c))
+    ws = new_workspace("fp.json")
+    p = ws.import_code(SF_B, "fpp")
+    first = ws.flows(FLOW_SRC, FLOW_DST, max_depth=2)
+    second = ws.flows(FLOW_SRC, FLOW_DST, max_depth=2)
+    assert len(calls) == 1
+    assert sorted(first.collect()) == sorted(second.collect())
+    key = ws.walk_key(max_depth=2)
+    p.release()
+    assert ws.walk_key(max_depth=2) == key
+    assert len(calls) == 2
+
+
 def test_open_waits_for_a_request_in_flight(spark, new_workspace, monkeypatch):
     """A request resolves, holds and analyses its SQL under the registry
     lock, so an `open` that lands between its hold and its analysis

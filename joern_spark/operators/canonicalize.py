@@ -7,15 +7,15 @@ memoized transitive closure over inheritance edges
 ("NYC is also known as New York City") form SAME_AS edges whose connected
 components must collapse to one canonical entity id.
 
-Small inputs (≤ SMALL_COMPONENT_THRESHOLD pair rows, the common case: the
-pair set is bounded by the alias vocabulary) are read with one bounded
-collect and solved by a driver union-find. Larger inputs use the
-distributed algorithm: iterative min-label propagation over the
-symmetrized edge set — each round every node takes the min label among
-itself and its neighbors. Each round is one shuffle (groupBy node) and
-the frontier is `dropDuplicates`-bounded, mirroring the reference flow
-engine's task-fingerprint dedup (Engine.scala:133-143).
-`localCheckpoint` truncates the lineage every round — without it the plan
+Small inputs (≤ SMALL_COMPONENT_THRESHOLD pair rows, raw or after one
+dedup pass — the common case: the distinct pair set is bounded by the
+alias vocabulary) are read with a bounded collect and solved by a driver
+union-find. Larger pair sets use the distributed algorithm: iterative
+min-label propagation over the symmetrized edge set — each round every
+node takes the min label among itself and its neighbors. Each round is
+one shuffle (groupBy node) and the frontier is `dropDuplicates`-bounded,
+mirroring the reference flow engine's task-fingerprint dedup
+(Engine.scala:133-143). `localCheckpoint` truncates the lineage every round — without it the plan
 grows exponentially (SURVEY.md §7 hard-part (a)). Each round also
 pointer-jumps labels through themselves (the large-star shortcut), so
 convergence is O(log diameter) and adversarially long alias chains are
@@ -36,10 +36,11 @@ MAX_ITERATIONS = 20
 
 # Distinct SAME_AS pairs are bounded by the alias vocabulary (not the
 # corpus): collapsing 10^12 turns still yields ~|aliases|^2 pairs at most.
-# Up to this many pair rows the component solve runs driver-side (one
-# bounded collect + union-find) instead of O(diameter) shuffle rounds —
-# the closure is resolved in one pass, as DynamicCallLinker resolves its
-# subclass closure once per pass (DynamicCallLinker.scala:31-33,94-111).
+# Up to this many pair rows (raw, or distinct after one dedup pass) the
+# component solve runs driver-side (a bounded collect + union-find)
+# instead of O(diameter) shuffle rounds — the closure is resolved in one
+# pass, as DynamicCallLinker resolves its subclass closure once per pass
+# (DynamicCallLinker.scala:31-33,94-111).
 SMALL_COMPONENT_THRESHOLD = 100_000
 
 
@@ -128,15 +129,25 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     """canonical_map(entity_key, canon) for every key in `pairs`;
     canon = min key of the connected component. Nodes not in any pair are
     absent (identity mapping is applied by the caller via coalesce).
-    `pairs` may repeat a pair. Up to SMALL_COMPONENT_THRESHOLD pair rows
-    are read with one bounded collect and solved by the driver
-    union-find; larger inputs run the distributed min-label loop. Every
-    call solves: a caller that reuses a map holds on to it."""
+    Every call solves: a caller that reuses a map holds on to it.
+
+    `pairs` may repeat a pair. Up to SMALL_COMPONENT_THRESHOLD rows are
+    read with one bounded collect and solved by the driver union-find,
+    with no shuffle. A longer input is deduped once into a checkpoint:
+    repeats (every alias turn restating one pair) collapse a
+    corpus-sized row count to the vocabulary-sized pair set, which a
+    second bounded read hands to the driver. Only a pair set still over
+    the threshold runs the distributed min-label loop, over that same
+    checkpoint. So `pairs` is evaluated at most twice (the bounded read,
+    then the dedup pass); a caller whose pair plan is costly to
+    recompute (a join) hands over a lazily checkpointed frame."""
     edges = _bounded_rows(pairs, "a", "b")
+    if len(edges) > SMALL_COMPONENT_THRESHOLD:
+        pairs = pairs.select("a", "b").dropDuplicates().localCheckpoint(eager=True)
+        edges = _bounded_rows(pairs, "a", "b")
     if len(edges) <= SMALL_COMPONENT_THRESHOLD:
         return _union_find_local(edges, pairs.sparkSession)
-    sym = pairs.select("a", "b")
-    sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.dropDuplicates().localCheckpoint(eager=True)
     # label(n) starts as min(n, min neighbor) and contracts each round
     labels = (
@@ -306,6 +317,7 @@ def _merge_distributed(existing: DataFrame, new_pairs: DataFrame) -> DataFrame:
             F.coalesce("_ca", F.col("a")).alias("a"),
             F.coalesce("_cb", F.col("b")).alias("b"),
         )
+        .localCheckpoint(eager=False)  # one evaluation of the joins
     )
     relabel = (
         connected_components(resolved)

@@ -262,8 +262,11 @@ def dedup_survivors(
     from joern_spark.operators.textstats import doc_stats
 
     pad = lambda c: F.lpad(c.cast("string"), ID_PAD, "0")  # noqa: E731
+    # the pair plan is a join: checkpoint it lazily so the component
+    # solve's bounded read and dedup pass share one evaluation
     cmap = connected_components(
         pairs.select(pad(F.col("a")).alias("a"), pad(F.col("b")).alias("b"))
+        .localCheckpoint(eager=False)
     ).select(
         F.col("entity_key").alias("_k"), F.col("canon").alias("_comp")
     ).localCheckpoint(eager=True)

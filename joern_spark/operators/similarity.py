@@ -819,7 +819,9 @@ def semantic_dedup(
     pad = lambda c: F.lpad(c.cast("string"), ID_PAD, "0")  # noqa: E731
     cmap = (
         connected_components(
+            # lazily checkpointed: the solve reads the join-built pairs once
             pairs.select(pad(F.col("src")).alias("a"), pad(F.col("dst")).alias("b"))
+            .localCheckpoint(eager=False)
         )
         .select(F.col("entity_key").alias("_k"), F.col("canon").alias("_comp"))
         .localCheckpoint(eager=True)

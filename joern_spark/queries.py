@@ -61,14 +61,6 @@ def _per_corpus(
     return memoized
 
 
-@_per_corpus
-def _canonical_map(spark, sf_dir):
-    """The SAME_AS component map: five registered queries rewrite
-    through it (canonical map, final and semantics triples, kind
-    recovery, CHA linking), so the battery solves it once."""
-    return pipeline.canonical_map(_t(spark, sf_dir))
-
-
 def q_turns(spark, sf_dir):
     return assemble.turn_nodes(_t(spark, sf_dir)).select(
         "id", "conv_id", "turn_idx", "role", "text", "tool"
@@ -115,8 +107,12 @@ def q_stub_entities(spark, sf_dir):
     return link.stub_entities(_mentions(spark, sf_dir), read_entities(spark))
 
 
+@_per_corpus
 def q_canonical_map(spark, sf_dir):
-    return _canonical_map(spark, sf_dir)
+    """The SAME_AS component map: four more registered queries rewrite
+    through it (final and semantics triples, kind recovery, CHA
+    linking), so the battery solves it once."""
+    return pipeline.canonical_map(_t(spark, sf_dir))
 
 
 def q_rebind_current_db(spark, sf_dir):
@@ -393,7 +389,7 @@ def q_triples_final(spark, sf_dir):
     throughput at sf3."""
     t = _t(spark, sf_dir)
     return pipeline.triples_final(
-        t, extract_triples_raw(t), _canonical_map(spark, sf_dir)
+        t, extract_triples_raw(t), q_canonical_map(spark, sf_dir)
     )
 
 
@@ -412,7 +408,7 @@ def q_triples_semantics(spark, sf_dir):
     )
 
     t = _t(spark, sf_dir)
-    cmap = _canonical_map(spark, sf_dir)
+    cmap = q_canonical_map(spark, sf_dir)
     raw = extract_triples_raw(t)
     dyn = rebind.dbcur_triples(t)
     sem = semantics_df(spark, current_semantics())
@@ -741,7 +737,7 @@ def q_kind_recovery(spark, sf_dir):
     tested)."""
     from joern_spark.operators.recover import recover_kinds
 
-    return recover_kinds(_mentions(spark, sf_dir), _canonical_map(spark, sf_dir))
+    return recover_kinds(_mentions(spark, sf_dir), q_canonical_map(spark, sf_dir))
 
 
 def q_tool_stats(spark, sf_dir):
@@ -1106,7 +1102,7 @@ def q_linked_multi(spark, sf_dir):
     """CHA-style multi-candidate entity resolution: one mention row per
     alias-component candidate, internal-preferred."""
     return link.link_mentions_cha(
-        _mentions(spark, sf_dir), read_entities(spark), _canonical_map(spark, sf_dir)
+        _mentions(spark, sf_dir), read_entities(spark), q_canonical_map(spark, sf_dir)
     )
 
 

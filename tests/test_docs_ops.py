@@ -574,6 +574,36 @@ def test_dedup_survivors_shuffle_path_identical(spark):
     assert bc == sh
 
 
+def test_dedup_survivors_computes_pairs_once_above_threshold(spark, monkeypatch):
+    """Above the component threshold the solve reads its input twice (a
+    bounded read, then the dedup pass). dedup_survivors checkpoints its
+    pair plan lazily, so a costly pair plan (here: behind a shuffle, as
+    a join would be) computes each pair row once, through the
+    distributed min-label loop too."""
+    from joern_spark.operators import canonicalize as C
+
+    monkeypatch.setattr(C, "SMALL_COMPONENT_THRESHOLD", 2)
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(a):
+        seen.add(1)
+        return a
+
+    tick_udf = F.udf(tick, "long").asNondeterministic()
+    docs = spark.createDataFrame(
+        [(i, f"doc number {i % 3} body " * (i + 1)) for i in range(9)],
+        "doc_id long, text string",
+    )
+    raw = spark.createDataFrame(
+        [(0, 3), (3, 6), (1, 4), (2, 5), (4, 7)], "a long, b long"
+    ).repartition(3)
+    pairs = raw.select(tick_udf("a").alias("a"), "b")
+    out = {r.doc_id: r.keep_id for r in dedup.dedup_survivors(docs, pairs).collect()}
+    assert seen.value == 5
+    assert out[0] == out[3] == out[6] and out[1] == out[4] == out[7]
+    assert out[8] == 8
+
+
 def test_dedup_survivors_wide_ids(spark):
     """doc_ids near int64 max must not collide: the component key pad is
     20 chars (max int64 digits), so ordering/grouping stays exact."""

@@ -70,6 +70,22 @@ def test_canonical_map_solves_per_call(spark, make_transcripts, monkeypatch):
     }
 
 
+def test_cc_overflowing_raw_pairs_dedup_to_the_driver(spark, monkeypatch):
+    """Raw pair rows over the threshold that dedup to a pair set within
+    it (alias turns restating one pair) still take the driver
+    union-find: one dedup pass and a second bounded read, no min-label
+    loop."""
+    from joern_spark.operators import canonicalize as C
+
+    monkeypatch.setattr(C, "SMALL_COMPONENT_THRESHOLD", 2)
+    calls = count_union_finds(monkeypatch)
+    got = cmap(spark, [("nyc", "new_york_city")] * 4 + [("big_apple", "nyc")])
+    assert len(calls) == 1
+    assert got == {
+        "big_apple": "big_apple", "nyc": "big_apple", "new_york_city": "big_apple",
+    }
+
+
 def test_query_battery_solves_canonical_map_once(spark, monkeypatch):
     """The battery's per-corpus memo: the canonical-map, final-triples
     and kind-recovery queries on one corpus solve the SAME_AS components
